@@ -1,10 +1,12 @@
-"""Composable predicate operators (SURVEY.md §2.3 F1-F7).
+"""Composable predicate operators (SURVEY.md §2.3 F1-F4, F6).
 
 The reference pushes every predicate to the PurpleAir server or the
 downstream DB; in our engine the same predicates exist as declarative
 DataFrame filters, so Catalyst pushes them into the parquet scan
 (PushedFilters / partition pruning) — the Spark-native equivalent of
-the reference's server-side pushdown.
+the reference's server-side pushdown. F5 (bounding box) is the 2-D
+range leg of the `snapshot_filters` catalog query; F7 (time + sensor)
+is `dashboard.panel`.
 """
 
 from __future__ import annotations
@@ -41,18 +43,6 @@ def max_age(df: DataFrame, seconds: int, *, now: Column | None = None) -> DataFr
     )
 
 
-def bounding_box(
-    df: DataFrame, nwlng: float, nwlat: float, selng: float, selat: float
-) -> DataFrame:
-    """F5: 2-D spatial range predicate (PurpleAirAPI.py:213-221)."""
-    return df.filter(
-        (F.col("latitude") <= F.lit(nwlat))
-        & (F.col("latitude") >= F.lit(selat))
-        & (F.col("longitude") >= F.lit(nwlng))
-        & (F.col("longitude") <= F.lit(selng))
-    )
-
-
 def time_range(df: DataFrame, ts_col: str, start_epoch: int, end_epoch: int) -> DataFrame:
     """F6: half-open historic range — ts >= start AND ts < end
     (PurpleAirAPI.py:252-259). Prunes partitions when ts is the
@@ -60,13 +50,4 @@ def time_range(df: DataFrame, ts_col: str, start_epoch: int, end_epoch: int) -> 
     return df.filter(
         (F.col(ts_col) >= F.timestamp_seconds(F.lit(start_epoch)))
         & (F.col(ts_col) < F.timestamp_seconds(F.lit(end_epoch)))
-    )
-
-
-def dashboard_filter(
-    df: DataFrame, ts_col: str, start_epoch: int, end_epoch: int, sensor_index: int
-) -> DataFrame:
-    """F7: the Grafana panel predicate — $__timeFilter + sensor equality."""
-    return time_range(df, ts_col, start_epoch, end_epoch).filter(
-        F.col("sensor_index") == F.lit(sensor_index)
     )

@@ -129,23 +129,6 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[flo
     return planes
 
 
-def lsh_bucket_signature(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Sign-of-dot-product bit signature against fixed hyperplanes.
-
-    Same flat multiply-add formulation as `lsh_band_signatures` (plane
-    weights are literals, so the dot is codegen-able arithmetic).
-    """
-    elems = [vec_col[d] for d in range(len(planes[0]))]
-    bits = []
-    for i, plane in enumerate(planes):
-        d = sum((elems[j] * plane[j] for j in range(1, len(plane))), elems[0] * plane[0])
-        bits.append(F.when(d >= 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long")))
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig + b
-    return sig
-
-
 def lsh_band_signatures(vec_col: Column, planes: list[list[float]], bands: int) -> Column:
     """Array of per-band sign signatures (OR-amplified LSH index).
 

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -38,20 +38,6 @@ def skewed_variant(
             F.col(key_col)
         ),
     )
-
-
-def salted_count(
-    df: DataFrame, keys: Sequence[str], *, salt_buckets: int = 16
-) -> DataFrame:
-    """Two-phase count for skewed group keys.
-
-    Phase 1 groups on (keys, salt) — spreading a hot key over
-    ``salt_buckets`` reducers — phase 2 sums the partials. Total work
-    unchanged; max reducer load divided by the bucket count.
-    """
-    salt = (F.spark_partition_id() % salt_buckets).alias("_salt")
-    partial = df.groupBy(*keys, salt).agg(F.count(F.lit(1)).alias("_partial"))
-    return partial.groupBy(*keys).agg(F.sum("_partial").alias("n"))
 
 
 def salted_agg(

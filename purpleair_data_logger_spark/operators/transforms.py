@@ -1,14 +1,16 @@
-"""Row-transform operators: flatten, zip, conformance, casts, vertical split.
+"""Row-transform operators: conformance, renames, casts, vertical split.
 
 Spark-first re-expressions of the reference's per-dict transforms
-(SURVEY.md §2.2 T1-T7). Each works on whole DataFrames — one narrow
+(SURVEY.md §2.2 T3-T7). Each works on whole DataFrames — one narrow
 projection the optimizer can fuse, instead of the reference's
-row-at-a-time dict mutation.
+row-at-a-time dict mutation. API payloads are not decoded here:
+`sources.spark_datasource.payload_to_rows` flattens, zips, conforms and
+renames them in one pass, and these operators serve other frames.
 
-Reference parity notes (file:line in /root/reference/purpleair_data_logger/):
+Reference parity notes (file:line in the reference's purpleair_data_logger/):
 
-* T1 flatten        — PurpleAirDataLogger.py:118-148
-* T2 fields×data    — PurpleAirDataLogger.py:193-208
+* T1 flatten        — PurpleAirDataLogger.py:118-148 (`payload_to_rows`)
+* T2 fields×data    — PurpleAirDataLogger.py:193-208 (`payload_to_rows`)
 * T3 conformance    — PurpleAirDataLogger.py:81-99 (dup: PurpleAirAPI.py:348-363)
 * T4 vertical split — PurpleAirPSQLDataLogger.py:153-347 (9 projection blocks)
 * T5 epoch cast     — PurpleAirPSQLDataLogger.py:138-151
@@ -17,113 +19,13 @@ Reference parity notes (file:line in /root/reference/purpleair_data_logger/):
 
 from __future__ import annotations
 
-from typing import Mapping, Sequence
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from purpleair_data_logger_spark import schema as S
 
-# Extra columns the reference flatten produces that are NOT part of the
-# accepted field universe (PurpleAirDataLogger.py:128,135,145). The
-# reference carries them in the dict and its sinks silently ignore them.
-_STATS_EXTRA_COLUMNS = ("stats_pm2.5", "pm2.5_time_stamp", "time_stamp_a", "time_stamp_b")
 
-_STATS_KEYS = (
-    "pm2.5",
-    "pm2.5_10minute",
-    "pm2.5_30minute",
-    "pm2.5_60minute",
-    "pm2.5_6hour",
-    "pm2.5_24hour",
-    "pm2.5_1week",
-    "time_stamp",
-)
-
-
-def _nested(parent: str, key: str) -> Column:
-    # Keys like "pm2.5" need backtick quoting inside a field path.
-    return F.col(f"{parent}.`{key}`")
-
-
-def flatten_sensor_struct(df: DataFrame, *, keep_extras: bool = False) -> DataFrame:
-    """T1: single-sensor payload → one-level frame (API field names).
-
-    Input shape: columns ``api_version, time_stamp, data_time_stamp,
-    sensor`` where ``sensor`` is the nested struct from
-    ``GET /v1/sensors/{index}`` (fixture shape: FIXTURES.md §2.1).
-
-    Mirrors PurpleAirDataLogger.py:118-148: ``sensor.stats`` maps to the
-    un-suffixed pseudo-average columns (plus the quirky ``stats_pm2.5``
-    and ``pm2.5_time_stamp`` extras), ``sensor.stats_a``/``stats_b`` map
-    to ``_a``/``_b``-suffixed columns (plus ``time_stamp_a/b``), every
-    other ``sensor.*`` key passes through. Pure nested projection — no
-    Python per row, stays in whole-stage codegen.
-    """
-    sensor_type = dict(zip(df.schema.fieldNames(), df.schema.fields))["sensor"].dataType
-    sensor_keys = [f.name for f in sensor_type.fields]
-
-    # (alias, column) pairs; duplicates collapse last-wins below, matching
-    # the reference's dict-overwrite behavior when a scalar key (e.g.
-    # "pm2.5_a") coexists with its stats_a-derived twin.
-    pairs: list[tuple[str, Column]] = [("data_time_stamp", F.col("data_time_stamp"))]
-    for key in sensor_keys:
-        if key == "stats":
-            if keep_extras:
-                pairs.append(("stats_pm2.5", _nested("sensor.stats", "pm2.5")))
-            for k in _STATS_KEYS[1:-1]:
-                pairs.append((k, _nested("sensor.stats", k)))
-            if keep_extras:
-                pairs.append(("pm2.5_time_stamp", _nested("sensor.stats", "time_stamp")))
-        elif key in ("stats_a", "stats_b"):
-            suffix = key[-1]
-            for k in _STATS_KEYS[:-1]:
-                pairs.append((f"{k}_{suffix}", _nested(f"sensor.{key}", k)))
-            if keep_extras:
-                pairs.append((f"time_stamp_{suffix}", _nested(f"sensor.{key}", "time_stamp")))
-        else:
-            pairs.append((key, _nested("sensor", key)))
-
-    last: dict[str, Column] = {}
-    for name, c in pairs:
-        last[name] = c  # later assignment wins, like dict insert
-    return df.select(*[c.alias(n) for n, c in last.items()])
-
-
-def zip_fields_data(
-    spark: SparkSession,
-    payload: Mapping,
-    *,
-    conform_after: bool = True,
-) -> DataFrame:
-    """T2: multi-sensor payload (``fields`` list + ``data`` rows) → frame.
-
-    The payload's ``fields`` is a positional header for each row of
-    ``data`` (shape documented at PurpleAirDataLogger.py:184-190); the
-    shared ``data_time_stamp`` is stamped onto every row
-    (PurpleAirDataLogger.py:202). Spark-native: apply the header as a
-    schema in one ``createDataFrame`` instead of zipping per row.
-    """
-    fields: Sequence[str] = list(payload["fields"])
-    stamp = payload["data_time_stamp"]
-    rows = [tuple(r) + (stamp,) for r in payload["data"]]
-    col_names = [*fields, "data_time_stamp"]
-    schema_fields = []
-    for name in col_names:
-        reg = S.BY_API_NAME.get(name)
-        schema_fields.append(
-            f"`{name}` {reg.wire_type.simpleString()}" if reg else f"`{name}` string"
-        )
-    df = spark.createDataFrame(rows, schema=", ".join(schema_fields))
-    return conform(df) if conform_after else df
-
-
-def conform(
-    df: DataFrame,
-    *,
-    use_null: bool = False,
-    keep_extras: bool = False,
-) -> DataFrame:
+def conform(df: DataFrame, *, use_null: bool = False) -> DataFrame:
     """T3: schema conformance — every accepted field present, gaps filled.
 
     Default preserves the reference's observable sentinel semantics
@@ -148,9 +50,6 @@ def conform(
         else:
             c = F.lit(f.sentinel).cast(typ)
         cols.append(c.alias(name))
-    if keep_extras:
-        registry = {f.api_name for f in S.KEY_FIELDS + S.FIELDS}
-        cols += [F.col(f"`{c}`") for c in df.columns if c not in registry]
     return df.select(*cols)
 
 
@@ -184,10 +83,14 @@ def cast_epoch_to_timestamp(df: DataFrame) -> DataFrame:
 
 
 def to_storage_form(df: DataFrame, *, use_null: bool = False) -> DataFrame:
-    """Payload frame (API names, wire types) → at-rest wide frame.
+    """API-named frame (wire types) → at-rest wide frame.
 
     conform → rename → epoch cast: the full write-path projection chain,
-    still a single Catalyst-fusable select pipeline.
+    still a single Catalyst-fusable select pipeline. A decoded payload
+    (`payload_frame`, ``format("purpleair")``) is already SQL-named and
+    conformed and needs only `cast_epoch_to_timestamp`; passed through
+    here, conform would find none of its API names and sentinel-fill
+    every column.
     """
     return cast_epoch_to_timestamp(rename_to_sql(conform(df, use_null=use_null)))
 
@@ -205,20 +108,3 @@ def vertical_split(df: DataFrame) -> dict[str, DataFrame]:
         cols = S.KEY_COLUMNS + [f.sql_name for f in S.group_fields(table)]
         out[table] = df.select(*cols)
     return out
-
-
-def reading_from_json_payload(
-    spark: SparkSession, payload: Mapping, *, keep_extras: bool = False
-) -> DataFrame:
-    """Single-sensor JSON payload (parsed dict) → flattened 1-row frame.
-
-    Builds the nested frame via ``spark.read.json`` semantics
-    (createDataFrame on the raw dict), then applies T1. Used by the
-    streaming poll source and the fixture-driven tests.
-    """
-    import json as _json
-
-    parsed = spark.read.json(
-        spark.sparkContext.parallelize([_json.dumps(payload)], 1)
-    )
-    return flatten_sensor_struct(parsed, keep_extras=keep_extras)

@@ -62,38 +62,3 @@ def count(plan: str, node: str) -> int:
     """Count physical nodes via their '(N) NodeName' detail headers
     (the tree section would double-count)."""
     return len(re.findall(rf"\(\d+\) {node}", plan))
-
-
-def assert_filter_pushed(df: DataFrame, fragment: str) -> None:
-    plan = formatted_plan(df)
-    assert any(fragment in f for f in pushed_filters(plan)), (
-        f"expected pushed filter containing {fragment!r}; got {pushed_filters(plan)}"
-    )
-
-
-def assert_column_pruned(df: DataFrame, *, absent: str) -> None:
-    plan = formatted_plan(df)
-    schemas = read_schemas(plan)
-    assert schemas, "no parquet ReadSchema found"
-    assert all(absent not in s for s in schemas), (
-        f"column {absent!r} should be pruned from scan; schemas: {schemas}"
-    )
-
-
-def assert_broadcast_joins(df: DataFrame, *, at_least: int) -> None:
-    plan = formatted_plan(df)
-    n = count(plan, "BroadcastHashJoin")
-    assert n >= at_least, f"expected >= {at_least} BroadcastHashJoin, found {n}\n{plan[:2000]}"
-
-
-def assert_partial_aggregation(df: DataFrame) -> None:
-    """Hash aggregate split into partial (map-side) + final — the shape
-    that bounds shuffle volume to one row per key per mapper."""
-    plan = formatted_plan(df)
-    assert count(plan, "HashAggregate") >= 2, f"no partial+final HashAggregate pair\n{plan[:2000]}"
-
-
-def max_shuffles(df: DataFrame, limit: int) -> None:
-    plan = formatted_plan(df)
-    n = count(plan, "Exchange")
-    assert n <= limit, f"plan has {n} exchanges, expected <= {limit}\n{plan[:3000]}"

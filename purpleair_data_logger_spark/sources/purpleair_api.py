@@ -1,17 +1,19 @@
 """PurpleAir API source connector (SURVEY.md §2.1 S1-S5).
 
 Pure-function request builders that mirror the reference's REST surface
-(reference ``purpleair_data_logger/PurpleAirAPI.py``), plus
-payload→DataFrame glue. Design points:
+(reference ``purpleair_data_logger/PurpleAirAPI.py``), plus a source
+facade that decodes each payload with the DataSource's decoder
+(`spark_datasource.payload_frame`). Design points:
 
 * Request construction is side-effect-free and unit-testable: build the
   URL/params, inject any transport (the default uses ``requests`` if
   available, but tests pass a stub returning recorded fixtures).
 * Server-side filter params (``location_type``, ``show_only``,
   ``modified_since``, ``max_age``, bounding box) are the connector's
-  predicate pushdown — SURVEY.md §2.3 F1-F6. The same predicates exist
-  as post-scan DataFrame filters in `operators.filters` so semantics
-  hold with or without a cooperative server.
+  predicate pushdown — SURVEY.md §2.3 F1-F6. ``location_type``,
+  ``show_only``, ``modified_since`` and ``max_age`` also exist as
+  post-scan DataFrame filters in `operators.filters`; the bounding box
+  is the 2-D range leg of the `snapshot_filters` catalog query.
 * Two reference bugs are intentionally NOT replicated:
   - historic requests sending ``modified_since=end_timestamp``
     (PurpleAirAPI.py:302);
@@ -29,7 +31,7 @@ from urllib.parse import urlencode
 
 from pyspark.sql import DataFrame, SparkSession
 
-from purpleair_data_logger_spark.operators import transforms as X
+from purpleair_data_logger_spark.sources.spark_datasource import payload_frame
 
 BASE_URL = "https://api.purpleair.com/v1/"
 
@@ -168,9 +170,10 @@ class PurpleAirSource:
     """Batch-shaped source facade: every fetch returns a DataFrame.
 
     The streaming poll loop (streaming.poll) drives this once per
-    trigger; each micro-batch is a small conformed DataFrame that the
-    sink layer appends — one write per table per trigger instead of the
-    reference's 9 INSERTs per reading.
+    trigger; each micro-batch is the same SQL-named wire frame
+    ``format("purpleair")`` emits, which the sink layer appends — one
+    write per table per trigger instead of the reference's 9 INSERTs
+    per reading.
     """
 
     def __init__(self, spark: SparkSession, api_key: str, transport: Transport = default_transport):
@@ -191,19 +194,11 @@ class PurpleAirSource:
             build_sensor_request(self.api_key, sensor_index, read_key, fields),
             self.transport,
         )
-        return X.conform(X.reading_from_json_payload(self.spark, payload))
+        return payload_frame(self.spark, payload)
 
     def fetch_multi(self, fields: str, **filters) -> DataFrame:
         payload = execute(
             build_multi_sensor_request(self.api_key, fields, **filters),
             self.transport,
         )
-        return X.zip_fields_data(self.spark, payload)
-
-    def fetch_historic(self, sensor_index: int, fields: str, **params) -> DataFrame:
-        payload = execute(
-            build_historic_request(self.api_key, sensor_index, fields, **params),
-            self.transport,
-        )
-        # historic payloads share the multi-sensor fields×data shape
-        return X.zip_fields_data(self.spark, payload)
+        return payload_frame(self.spark, payload)

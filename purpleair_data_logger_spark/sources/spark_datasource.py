@@ -20,16 +20,20 @@ Predicate options (``location_type``, ``show_only``, ``modified_since``,
 ``max_age``, bbox) are forwarded to the server — the connector-level
 pushdown of SURVEY.md §2.3.
 
-Rows are emitted in the wire-form wide schema (API names → SQL-safe
-names, epoch longs); downstream conforms/casts with
-`operators.transforms.to_storage_form` composability preserved.
+Rows are emitted in the wire-form wide schema (SQL-safe names, epoch
+longs, every accepted field present and sentinel-filled);
+`operators.transforms.cast_epoch_to_timestamp` turns them into the
+at-rest form. `payload_to_rows` is the package's only payload decoder:
+the DataSource runs it on executors, and `payload_frame` runs it in the
+calling process for `PurpleAirSource` and the CLI's `PollLoop`.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Iterator, Sequence
+from typing import Iterator
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -46,10 +50,12 @@ def _wire_schema() -> StructType:
     return S.wide_schema(at_rest=False)
 
 
-def _payload_to_rows(payload: dict) -> list[tuple]:
+def payload_to_rows(payload: dict) -> list[tuple]:
     """Payload (single- or multi-sensor shape) → wire-form tuples.
 
-    Runs on executors: pure python, uses only the schema registry.
+    Pure python over the schema registry only, so it runs on executors
+    (the DataSource readers) and in the calling process (`payload_frame`)
+    alike.
     """
     fields = [f for f in S.KEY_FIELDS + S.FIELDS]
 
@@ -80,8 +86,8 @@ def _payload_to_rows(payload: dict) -> list[tuple]:
                 # map to top level; stats["pm2.5"] must NOT overwrite the
                 # instantaneous sensor["pm2.5"] reading ('stats' follows
                 # 'pm2.5' in payload order), and stats["time_stamp"] is
-                # a stats-refresh time, not a reading column. Mirrors
-                # flatten_sensor_struct's _STATS_KEYS[1:-1] handling.
+                # a stats-refresh time, not a reading column
+                # (PurpleAirDataLogger.py:118-148).
                 for sk, sv in v.items():
                     if sk not in ("time_stamp", "pm2.5"):
                         rec[sk] = sv
@@ -100,6 +106,12 @@ def _payload_to_rows(payload: dict) -> list[tuple]:
             rec["data_time_stamp"] = stamp
             records.append(rec)
     return [build(r) for r in records]
+
+
+def payload_frame(spark: SparkSession, payload: dict) -> DataFrame:
+    """Payload → wire-form frame built in the calling process: the same
+    rows and schema ``format("purpleair")`` emits for it."""
+    return spark.createDataFrame(payload_to_rows(payload), _wire_schema())
 
 
 def _fetch(options: dict) -> dict:
@@ -149,7 +161,7 @@ class PurpleAirBatchReader(DataSourceReader):
         self.options = options
 
     def read(self, partition) -> Iterator[tuple]:
-        yield from _payload_to_rows(_fetch(self.options))
+        yield from payload_to_rows(_fetch(self.options))
 
 
 class PurpleAirStreamReader(SimpleDataSourceStreamReader):
@@ -168,7 +180,7 @@ class PurpleAirStreamReader(SimpleDataSourceStreamReader):
         return {"poll": 0}
 
     def read(self, start: dict):
-        rows = _payload_to_rows(_fetch(self.options))
+        rows = payload_to_rows(_fetch(self.options))
         return iter(rows), {"poll": start["poll"] + 1}
 
 

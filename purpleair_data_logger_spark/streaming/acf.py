@@ -41,10 +41,9 @@ from typing import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from purpleair_data_logger_spark.streaming.counter import scale_half_up
@@ -213,39 +212,4 @@ def acf_by_key(
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_acf(
-    spark: SparkSession,
-    source_path: str,
-    out_path: str,
-    checkpoint_path: str,
-    *,
-    key_col: str,
-    ts_col: str,
-    id_col: str,
-    value_col: str,
-    lags: tuple[int, ...] = (1, 2, 3),
-    decimals: int = 2,
-) -> StreamingQuery:
-    """File-source → per-key exact ACF snapshots → parquet append
-    sink."""
-    reader = spark.readStream.schema(spark.read.parquet(source_path).schema)
-    out = acf_by_key(
-        reader.parquet(source_path),
-        key_col,
-        ts_col,
-        id_col,
-        value_col,
-        lags=lags,
-        decimals=decimals,
-    )
-    return (
-        out.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )

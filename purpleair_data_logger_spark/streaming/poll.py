@@ -2,10 +2,10 @@
 
 The reference's ``while True: fetch → store → sleep(65)`` loops
 (PurpleAirDataLogger.py:101-155, 157-215) become a micro-batch driver:
-each trigger fetches one API payload, conforms it, and appends one
-micro-batch per table — the Spark-native trigger(processingTime="65s")
-shape, but expressed as an explicit loop so it is testable without a
-live API or a streaming runtime.
+each trigger fetches one API payload, decodes it with the DataSource's
+decoder, and appends one micro-batch per table — the Spark-native
+trigger(processingTime="65s") shape, but expressed as an explicit loop
+so it is testable without a live API or a streaming runtime.
 
 Cadence contract (reference parity):
 * default interval 65 s (PurpleAirDataLogger.py:41);
@@ -20,7 +20,7 @@ from __future__ import annotations
 import time
 from typing import Callable
 
-from purpleair_data_logger_spark.operators import transforms as X
+from purpleair_data_logger_spark.operators.transforms import cast_epoch_to_timestamp
 from purpleair_data_logger_spark.sinks.tables import SensorTableStore
 from purpleair_data_logger_spark.sources.purpleair_api import PurpleAirSource
 
@@ -58,12 +58,14 @@ class PollLoop:
         self._sleep = sleep
 
     def poll_single_once(self, sensor_index: int, read_key=None, fields=None) -> None:
-        df = self.source.fetch_sensor(sensor_index, read_key, fields)
-        self.store.append_wide(X.cast_epoch_to_timestamp(X.rename_to_sql(df)))
+        self._commit(self.source.fetch_sensor(sensor_index, read_key, fields))
 
     def poll_multi_once(self, fields: str, **filters) -> None:
-        df = self.source.fetch_multi(fields, **filters)
-        self.store.append_wide(X.cast_epoch_to_timestamp(X.rename_to_sql(df)))
+        self._commit(self.source.fetch_multi(fields, **filters))
+
+    def _commit(self, df) -> None:
+        # the same commit as start_ingest's foreachBatch sink
+        self.store.append_wide(cast_epoch_to_timestamp(df))
 
     def run(
         self,

@@ -31,10 +31,9 @@ import hashlib
 from typing import Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from purpleair_data_logger_spark.operators.sketches import BOTTOMK_DEFAULT_K
@@ -158,37 +157,4 @@ def quantiles_by_group(
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_quantiles(
-    spark: SparkSession,
-    source_path: str,
-    out_path: str,
-    checkpoint_path: str,
-    *,
-    group_col: str,
-    id_col: str,
-    value_col: str,
-    k: int = BOTTOMK_DEFAULT_K,
-    q_pcts: tuple[int, ...] = (10, 50, 90, 99),
-) -> StreamingQuery:
-    """File-source → per-key bottom-k quantile snapshots → parquet
-    append sink."""
-    reader = spark.readStream.schema(spark.read.parquet(source_path).schema)
-    out = quantiles_by_group(
-        reader.parquet(source_path),
-        group_col,
-        id_col,
-        value_col,
-        k=k,
-        q_pcts=q_pcts,
-    )
-    return (
-        out.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )

@@ -35,10 +35,9 @@ from typing import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 _STATE_SCHEMA = T.StructType(
@@ -175,30 +174,4 @@ def scd2_by_key(
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_scd2(
-    spark: SparkSession,
-    source_path: str,
-    out_path: str,
-    checkpoint_path: str,
-    *,
-    key_col: str,
-    ts_col: str,
-    id_col: str,
-    state_col: str,
-) -> StreamingQuery:
-    """File-source → per-key SCD2 episodes → parquet append sink."""
-    reader = spark.readStream.schema(spark.read.parquet(source_path).schema)
-    out = scd2_by_key(
-        reader.parquet(source_path), key_col, ts_col, id_col, state_col
-    )
-    return (
-        out.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )

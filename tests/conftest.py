@@ -11,6 +11,11 @@ from purpleair_data_logger_spark.session import get_spark  # noqa: E402
 
 TESTDATA_SMOKE = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
 REFERENCE_FIXTURES = "/root/reference/hardware_variant_json_samples"
+# Checked-in single-sensor payload in the FIXTURES.md §2.1 nested shape,
+# so the decode tests run where the reference fixtures are not mounted.
+SYNTHETIC_NESTED_FIXTURE = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "data", "single_sensor_nested.json"
+)
 
 
 @pytest.fixture(scope="session")

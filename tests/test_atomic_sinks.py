@@ -14,6 +14,7 @@ from purpleair_data_logger_spark import schema as S
 from purpleair_data_logger_spark.operators import transforms as X
 from purpleair_data_logger_spark.sinks import atomic
 from purpleair_data_logger_spark.sinks.tables import PARTITION_COL, SensorTableStore
+from purpleair_data_logger_spark.sources.spark_datasource import payload_frame
 
 BASE_TS = 1659710232  # 2022-08-05 … UTC
 
@@ -29,7 +30,7 @@ def _payload(ts, rows):
 
 
 def _wide(spark, ts, rows):
-    return X.to_storage_form(X.zip_fields_data(spark, _payload(ts, rows)))
+    return X.cast_epoch_to_timestamp(payload_frame(spark, _payload(ts, rows)))
 
 
 def _seeded_store(spark, tmp_path):

@@ -1,8 +1,9 @@
-"""Property-based round-trip invariant (SURVEY.md §5.4): conform()
-always yields exactly the registry schema with sentinel fill, no matter
-which fields the payload dropped — mirroring the reference's
+"""Property-based round-trip invariant (SURVEY.md §5.4): the payload
+decoder always yields exactly the registry schema with sentinel fill,
+no matter which fields the payload dropped — mirroring the reference's
 ``_validate_sensor_data_before_insert`` semantics
-(PurpleAirDataLogger.py:81-99)."""
+(PurpleAirDataLogger.py:81-99) — and agrees row for row with the
+DataFrame-level ``conform`` on the same record."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ from hypothesis import strategies as st
 
 from purpleair_data_logger_spark import schema as S
 from purpleair_data_logger_spark.operators import transforms as X
+from purpleair_data_logger_spark.sources.spark_datasource import payload_to_rows
 
 FIELD_NAMES = [f.api_name for f in S.FIELDS]
 
@@ -35,11 +37,20 @@ def test_conform_always_full_registry(spark, subset, sensor_index):
         "fields": fields,
         "data": [values],
     }
-    df = X.zip_fields_data(spark, payload)
-    assert df.columns == [f.api_name for f in S.KEY_FIELDS + S.FIELDS]
-    row = df.collect()[0].asDict()
+    (rec,) = payload_to_rows(payload)
+    row = dict(zip([f.sql_name for f in S.KEY_FIELDS + S.FIELDS], rec))
     for f in S.FIELDS:
         if f.api_name not in subset:
-            assert row[f.api_name] == f.sentinel, f.api_name
+            assert row[f.sql_name] == f.sentinel, f.api_name
         else:
-            assert row[f.api_name] is not None
+            assert row[f.sql_name] is not None
+
+    # the same record as an API-named frame, conformed by Spark
+    cols = [*fields, "data_time_stamp"]
+    raw = spark.createDataFrame(
+        [(*values, payload["data_time_stamp"])],
+        ", ".join(f"`{n}` {S.BY_API_NAME[n].wire_type.simpleString()}" for n in cols),
+    )
+    conformed = X.rename_to_sql(X.conform(raw))
+    assert conformed.columns == list(row)
+    assert [tuple(r) for r in conformed.collect()] == [rec]

@@ -13,6 +13,7 @@ import pytest
 from purpleair_data_logger_spark import schema as S
 from purpleair_data_logger_spark.operators import transforms as X
 from purpleair_data_logger_spark.sinks import csv_layout
+from purpleair_data_logger_spark.sources.spark_datasource import payload_frame
 
 REF_CONSTANTS = "/root/reference/purpleair_data_logger/PurpleAirCSVDataLoggerConstants.py"
 
@@ -53,8 +54,8 @@ def _payload(ts, rows):
 
 
 def test_round_trip_values_and_epoch_encoding(spark, tmp_path):
-    wide = X.to_storage_form(
-        X.zip_fields_data(spark, _payload(BASE_TS, [[1, "s1", 40, 1.5, BASE_TS - 7]]))
+    wide = X.cast_epoch_to_timestamp(
+        payload_frame(spark, _payload(BASE_TS, [[1, "s1", 40, 1.5, BASE_TS - 7]]))
     )
     root = str(tmp_path / "csv")
     paths = csv_layout.write_reference_csv_layout(wide, root)
@@ -80,8 +81,8 @@ def test_round_trip_values_and_epoch_encoding(spark, tmp_path):
 def test_append_mode_accumulates(spark, tmp_path):
     root = str(tmp_path / "csv")
     for i, ts in enumerate([BASE_TS, BASE_TS + 60]):
-        wide = X.to_storage_form(
-            X.zip_fields_data(spark, _payload(ts, [[1, "s1", 40 + i, 1.5, 0]]))
+        wide = X.cast_epoch_to_timestamp(
+            payload_frame(spark, _payload(ts, [[1, "s1", 40 + i, 1.5, 0]]))
         )
         csv_layout.write_reference_csv_layout(wide, root)
     env = spark.read.option("header", True).csv(

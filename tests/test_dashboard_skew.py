@@ -8,6 +8,7 @@ from purpleair_data_logger_spark.io import load_table
 from purpleair_data_logger_spark.operators import skew
 from purpleair_data_logger_spark.operators import transforms as X
 from purpleair_data_logger_spark.sinks.tables import SensorTableStore
+from purpleair_data_logger_spark.sources.spark_datasource import payload_frame
 
 BASE = 1659708000  # hour-aligned
 
@@ -26,7 +27,7 @@ def _seeded_store(spark, tmp_path) -> SensorTableStore:
         "fields": ["sensor_index", "name", "humidity", "pm2.5_atm", "temperature", "last_seen"],
         "data": rows,
     }
-    wide = X.to_storage_form(X.zip_fields_data(spark, payload)).withColumn(
+    wide = X.cast_epoch_to_timestamp(payload_frame(spark, payload)).withColumn(
         "data_time_stamp", F.col("last_seen")
     )
     store.append_wide(wide)

@@ -16,6 +16,7 @@ from purpleair_data_logger_spark.sinks.tables import (
     SensorTableStore,
     write_jdbc_sink,
 )
+from purpleair_data_logger_spark.sources.spark_datasource import payload_frame
 
 BASE_TS = 1659710232
 
@@ -39,8 +40,8 @@ def test_jdbc_nine_table_roundtrip_matches_parquet_store(spark, tmp_path):
     url = f"jdbc:derby:{tmp_path}/derbydb;create=true"
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
 
-    wide = X.to_storage_form(
-        X.zip_fields_data(
+    wide = X.cast_epoch_to_timestamp(
+        payload_frame(
             spark,
             _payload(
                 BASE_TS,
@@ -66,11 +67,11 @@ def test_jdbc_nine_table_roundtrip_matches_parquet_store(spark, tmp_path):
 def test_jdbc_append_mode_accumulates(spark, tmp_path):
     url = f"jdbc:derby:{tmp_path}/derbydb2;create=true"
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
-    wide1 = X.to_storage_form(
-        X.zip_fields_data(spark, _payload(BASE_TS, [[1, "s1", 40, 1.5, 0]]))
+    wide1 = X.cast_epoch_to_timestamp(
+        payload_frame(spark, _payload(BASE_TS, [[1, "s1", 40, 1.5, 0]]))
     )
-    wide2 = X.to_storage_form(
-        X.zip_fields_data(spark, _payload(BASE_TS + 60, [[1, "s1", 41, 1.6, 0]]))
+    wide2 = X.cast_epoch_to_timestamp(
+        payload_frame(spark, _payload(BASE_TS + 60, [[1, "s1", 41, 1.6, 0]]))
     )
     env1 = X.vertical_split(wide1)[S.ENVIRONMENTAL]
     env2 = X.vertical_split(wide2)[S.ENVIRONMENTAL]

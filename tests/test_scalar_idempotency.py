@@ -6,6 +6,7 @@ from purpleair_data_logger_spark import schema as S
 from purpleair_data_logger_spark.functions import scalar as fx
 from purpleair_data_logger_spark.operators import transforms as X
 from purpleair_data_logger_spark.sinks.tables import SensorTableStore
+from purpleair_data_logger_spark.sources.spark_datasource import payload_frame
 
 
 def test_scalar_functions(spark):
@@ -44,7 +45,7 @@ def test_cross_batch_idempotent_append(spark, tmp_path):
         "fields": ["sensor_index", "name", "humidity"],
         "data": [[1, "s1", 40], [2, "s2", 50]],
     }
-    wide = X.to_storage_form(X.zip_fields_data(spark, payload))
+    wide = X.cast_epoch_to_timestamp(payload_frame(spark, payload))
     store.append_wide(wide, dedup_against_existing=True)
     # same batch re-delivered + one genuinely new reading
     payload2 = {
@@ -52,7 +53,7 @@ def test_cross_batch_idempotent_append(spark, tmp_path):
         "fields": ["sensor_index", "name", "humidity"],
         "data": [[1, "s1", 40], [2, "s2", 50], [3, "s3", 60]],
     }
-    wide2 = X.to_storage_form(X.zip_fields_data(spark, payload2))
+    wide2 = X.cast_epoch_to_timestamp(payload_frame(spark, payload2))
     store.append_wide(wide2, dedup_against_existing=True)
 
     env = store.read(S.ENVIRONMENTAL)
@@ -91,8 +92,8 @@ def test_upsert_wide_replaces_existing_keys(spark, tmp_path):
         "fields": ["sensor_index", "name", "humidity"],
         "data": [[1, "s1", 70]],
     }
-    store.append_wide(X.to_storage_form(X.zip_fields_data(spark, day1)))
-    store.append_wide(X.to_storage_form(X.zip_fields_data(spark, day2)))
+    store.append_wide(X.cast_epoch_to_timestamp(payload_frame(spark, day1)))
+    store.append_wide(X.cast_epoch_to_timestamp(payload_frame(spark, day2)))
 
     # upsert into day1: sensor 1 gets humidity 99, sensor 3 is new
     patch = {
@@ -100,14 +101,13 @@ def test_upsert_wide_replaces_existing_keys(spark, tmp_path):
         "fields": ["sensor_index", "name", "humidity"],
         "data": [[1, "s1-renamed", 99], [3, "s3", 60]],
     }
-    store.upsert_wide(X.to_storage_form(X.zip_fields_data(spark, patch)))
+    store.upsert_wide(X.cast_epoch_to_timestamp(payload_frame(spark, patch)))
 
     env = {
         (r["sensor_index"], r["data_time_stamp"].day): r
         for r in store.read(S.ENVIRONMENTAL).collect()
     }
     assert len(env) == 4  # day1: sensors 1,2,3; day2: sensor 1
-    day = X.zip_fields_data(spark, day1)  # noqa: F841 (shape reference)
     d1 = 5  # 2022-08-05
     assert env[(1, d1)]["humidity"] == 99  # replaced
     assert env[(2, d1)]["humidity"] == 50  # survived

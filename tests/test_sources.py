@@ -66,13 +66,17 @@ def test_source_fetch_multi_with_stub_transport(spark):
         "api_version": "V1",
         "time_stamp": 1659710288,
         "data_time_stamp": 1659710232,
-        "fields": ["sensor_index", "name", "pm2.5_atm"],
-        "data": [[1, "s1", 1.5], [2, "s2", 2.5]],
+        "fields": ["sensor_index", "name", "pm2.5_atm", "pressure"],
+        # JSON integers in double fields must decode, not raise
+        "data": [[1, "s1", 1.5, 1013.25], [2, "s2", 0, 1012]],
     }
     src = api.PurpleAirSource(spark, "K", transport=lambda r: (200, payload))
-    df = src.fetch_multi("sensor_index,name,pm2.5_atm")
+    df = src.fetch_multi("sensor_index,name,pm2.5_atm,pressure")
     assert df.count() == 2
-    assert "pm2.5_atm" in df.columns
+    assert "pm2_5_atm" in df.columns
+    row = df.filter("sensor_index = 2").collect()[0]
+    for col, want in (("pm2_5_atm", 0.0), ("pressure", 1012.0)):
+        assert isinstance(row[col], float) and row[col] == want, col
 
 
 def test_config_xor(tmp_path):

@@ -10,9 +10,11 @@ from purpleair_data_logger_spark import schema as S
 from purpleair_data_logger_spark.operators.transforms import cast_epoch_to_timestamp
 from purpleair_data_logger_spark.sources import spark_datasource as ds
 
-from tests.conftest import REFERENCE_FIXTURES
+from tests.conftest import REFERENCE_FIXTURES, SYNTHETIC_NESTED_FIXTURE
 
-FIXTURES = sorted(glob.glob(os.path.join(REFERENCE_FIXTURES, "*.json")))
+FIXTURES = sorted(glob.glob(os.path.join(REFERENCE_FIXTURES, "*.json"))) + [
+    SYNTHETIC_NESTED_FIXTURE
+]
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -20,9 +22,8 @@ def _register(spark):
     ds.register(spark)
 
 
-@pytest.mark.skipif(not FIXTURES, reason="reference fixtures unavailable")
 def test_batch_read_single_sensor_fixture(spark):
-    fixture = FIXTURES[-1]  # the 3.0 variant with stats structs
+    fixture = FIXTURES[-1]  # synthetic 3.0 variant with all three stats structs
     with open(fixture) as f:
         payload = json.load(f)
     df = spark.read.format("purpleair").option("fixture_path", fixture).load()
@@ -117,3 +118,64 @@ def test_streaming_ingest_end_to_end(spark, tmp_path):
     station = store.read(S.STATION)
     assert {r["name"] for r in station.collect()} == {"s1", "s2"}
     assert station.collect()[0]["data_time_stamp"].year == 2022
+
+
+def test_ingest_routes_store_identical_rows(spark, tmp_path):
+    """Every ingest route decodes with `payload_to_rows` and commits the
+    same way, so one nested single-sensor payload plus one multi-sensor
+    payload land as identical rows in all nine tables whether they come
+    through the batch DataSource, the streaming ingest or the CLI's
+    poll loop."""
+    from purpleair_data_logger_spark.sinks.tables import SensorTableStore
+    from purpleair_data_logger_spark.sources.purpleair_api import PurpleAirSource
+    from purpleair_data_logger_spark.streaming.ingest import start_ingest
+    from purpleair_data_logger_spark.streaming.poll import PollLoop
+
+    with open(SYNTHETIC_NESTED_FIXTURE) as f:
+        single = json.load(f)
+    multi = {
+        "data_time_stamp": single["data_time_stamp"] + 120,
+        "fields": ["sensor_index", "name", "pm2.5_atm", "pressure", "humidity", "last_seen"],
+        "data": [
+            [single["sensor"]["sensor_index"], "s1", 0, 1012, 40, 1659710300],
+            [7, "s7", 2.5, 1013.25, None, None],
+        ],
+    }
+    paths = {}
+    for name, payload in (("single", single), ("multi", multi)):
+        paths[name] = tmp_path / f"{name}.json"
+        paths[name].write_text(json.dumps(payload))
+
+    stores = {
+        route: SensorTableStore(spark, str(tmp_path / route), cluster_partitions=2)
+        for route in ("batch", "stream", "poll")
+    }
+    for p in paths.values():
+        df = spark.read.format("purpleair").option("fixture_path", str(p)).load()
+        stores["batch"].append_wide(cast_epoch_to_timestamp(df))
+
+    for name, p in paths.items():
+        start_ingest(
+            spark,
+            stores["stream"],
+            checkpoint_path=str(tmp_path / f"ckpt_{name}"),
+            source_options={"fixture_path": str(p)},
+            available_now=True,
+        ).awaitTermination(180)
+
+    for mode, payload, kwargs in (
+        ("single", single, {"sensor_index": single["sensor"]["sensor_index"]}),
+        ("multi", multi, {"fields": ",".join(multi["fields"])}),
+    ):
+        src = PurpleAirSource(spark, "K", transport=lambda r, p=payload: (200, p))
+        loop = PollLoop(src, stores["poll"], sleep=lambda s: None)
+        assert loop.run(mode=mode, iterations=1, **kwargs) == 1
+
+    for table in S.TABLE_NAMES:
+        got = {
+            route: sorted(tuple(r) for r in store.read(table).collect())
+            for route, store in stores.items()
+        }
+        assert len(got["batch"]) == 3, table
+        assert got["stream"] == got["batch"], table
+        assert got["poll"] == got["batch"], table

@@ -8,6 +8,7 @@ from purpleair_data_logger_spark import schema as S
 from purpleair_data_logger_spark.operators import transforms as X
 from purpleair_data_logger_spark.sinks.tables import SensorTableStore
 from purpleair_data_logger_spark.sources import purpleair_api as api
+from purpleair_data_logger_spark.sources.spark_datasource import payload_frame
 from purpleair_data_logger_spark.streaming.continuous_aggregate import (
     batch_hourly_refresh,
     hourly_aggregate_plan,
@@ -41,7 +42,7 @@ def test_append_read_reconstruct(spark, tmp_path):
     payload = _multi_payload(
         BASE_TS, [[1, "s1", 40, 1.5, BASE_TS - 10], [2, "s2", 50, 2.5, BASE_TS - 20]]
     )
-    wide = X.to_storage_form(X.zip_fields_data(spark, payload))
+    wide = X.cast_epoch_to_timestamp(payload_frame(spark, payload))
     store.append_wide(wide)
 
     env = store.read(S.ENVIRONMENTAL)
@@ -62,7 +63,7 @@ def test_append_read_reconstruct(spark, tmp_path):
 def test_append_dedup_on_pk(spark, tmp_path):
     store = _store(spark, tmp_path)
     payload = _multi_payload(BASE_TS, [[1, "s1", 40, 1.5, 0], [1, "s1", 40, 1.5, 0]])
-    wide = X.to_storage_form(X.zip_fields_data(spark, payload))
+    wide = X.cast_epoch_to_timestamp(payload_frame(spark, payload))
     store.append_wide(wide)  # duplicate PK within batch → one row
     assert store.read(S.STATION).count() == 1
 
@@ -72,7 +73,7 @@ def test_retention_drops_old_partitions(spark, tmp_path):
     old_ts = BASE_TS - 40 * 86400
     for ts in (old_ts, BASE_TS):
         payload = _multi_payload(ts, [[1, "s1", 40, 1.5, ts]])
-        store.append_wide(X.to_storage_form(X.zip_fields_data(spark, payload)))
+        store.append_wide(X.cast_epoch_to_timestamp(payload_frame(spark, payload)))
     assert store.read(S.ENVIRONMENTAL).count() == 2
 
     now = datetime.datetime.fromtimestamp(BASE_TS, datetime.timezone.utc)
@@ -94,7 +95,7 @@ def test_policy_catalog_f8_add_if_absent_and_run(spark, tmp_path):
     old_ts = BASE_TS - 40 * 86400
     for ts in (old_ts, BASE_TS):
         payload = _multi_payload(ts, [[1, "s1", 40, 1.5, ts]])
-        store.append_wide(X.to_storage_form(X.zip_fields_data(spark, payload)))
+        store.append_wide(X.cast_epoch_to_timestamp(payload_frame(spark, payload)))
 
     assert store.add_compression_policy(S.ENVIRONMENTAL, after_days=14) is True
     assert store.add_compression_policy(S.ENVIRONMENTAL, after_days=14) is False
@@ -168,7 +169,7 @@ def test_hourly_aggregate_batch_and_refresh_window(spark, tmp_path):
             ts = ALIGNED_TS + h * 3600 + m * 60
             rows.append([1, "s1", 40 + h, 1.5 * h, ts])
     payload = _multi_payload(ALIGNED_TS, rows)
-    wide = X.to_storage_form(X.zip_fields_data(spark, payload))
+    wide = X.cast_epoch_to_timestamp(payload_frame(spark, payload))
     # stamp per-row data_time_stamp: zip uses the shared payload stamp,
     # so rebuild with distinct data_time_stamp per reading
     from pyspark.sql import functions as F
@@ -343,7 +344,7 @@ def test_streaming_hourly_aggregate_available_now(spark, tmp_path):
     payload = _multi_payload(ALIGNED_TS, rows)
     from pyspark.sql import functions as F
 
-    wide = X.to_storage_form(X.zip_fields_data(spark, payload)).withColumn(
+    wide = X.cast_epoch_to_timestamp(payload_frame(spark, payload)).withColumn(
         "data_time_stamp", F.col("last_seen")
     )
     store.append_wide(wide)

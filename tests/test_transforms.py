@@ -4,14 +4,15 @@ import glob
 import json
 import os
 
-import pytest
-
 from purpleair_data_logger_spark import schema as S
 from purpleair_data_logger_spark.operators import transforms as X
+from purpleair_data_logger_spark.sources.spark_datasource import payload_frame
 
-from tests.conftest import REFERENCE_FIXTURES
+from tests.conftest import REFERENCE_FIXTURES, SYNTHETIC_NESTED_FIXTURE
 
-FIXTURE_FILES = sorted(glob.glob(os.path.join(REFERENCE_FIXTURES, "*.json")))
+FIXTURE_FILES = sorted(glob.glob(os.path.join(REFERENCE_FIXTURES, "*.json"))) + [
+    SYNTHETIC_NESTED_FIXTURE
+]
 
 
 def _load(path):
@@ -19,58 +20,61 @@ def _load(path):
         return json.load(f)
 
 
-@pytest.mark.skipif(not FIXTURE_FILES, reason="reference fixtures unavailable")
+def _stats_derived(sensor) -> set:
+    """API names a stats / stats_a / stats_b struct produces. ``stats``
+    yields only the pseudo-averages: its ``pm2.5`` must not overwrite
+    the instantaneous reading (PurpleAirDataLogger.py:126-127)."""
+    out = set()
+    for sk, suffix in (("stats", ""), ("stats_a", "_a"), ("stats_b", "_b")):
+        for k in sensor.get(sk, ()):
+            if k != "time_stamp" and (sk, k) != ("stats", "pm2.5"):
+                out.add(f"{k}{suffix}")
+    return out
+
+
 def test_flatten_all_hardware_variants(spark):
-    """T1 against every recorded API payload the reference ships."""
+    """T1 against every recorded API payload the reference ships, plus
+    the checked-in synthetic one."""
     for path in FIXTURE_FILES:
         payload = _load(path)
-        df = X.reading_from_json_payload(spark, payload, keep_extras=True)
+        df = payload_frame(spark, payload)
         row = df.collect()[0].asDict()
         assert row["data_time_stamp"] == payload["data_time_stamp"]
         assert row["sensor_index"] == payload["sensor"]["sensor_index"]
-        # every non-struct sensor key passes through (keys that a stats
-        # struct also produces are overridden last-wins, like the
-        # reference's dict — skip those from the pass-through check)
-        stats_derived = set()
-        for sk, suffix in (("stats", ""), ("stats_a", "_a"), ("stats_b", "_b")):
-            if sk in payload["sensor"]:
-                for k in payload["sensor"][sk]:
-                    if k != "time_stamp":
-                        stats_derived.add(f"{k}{suffix}")
+        # every accepted non-struct sensor key passes through (keys that
+        # a stats struct also produces are overridden last-wins, like
+        # the reference's dict — skip those from the pass-through check)
+        stats_derived = _stats_derived(payload["sensor"])
         for k, v in payload["sensor"].items():
             if k in ("stats", "stats_a", "stats_b") or k in stats_derived:
                 continue
-            assert row[k] == v, f"{os.path.basename(path)}: {k}"
-        # stats handling (only the 3.0 variant carries stats)
+            if k in S.BY_API_NAME:
+                assert row[S.API_TO_SQL[k]] == v, f"{os.path.basename(path)}: {k}"
+        # stats handling
         if "stats" in payload["sensor"]:
             st = payload["sensor"]["stats"]
-            assert row["stats_pm2.5"] == st["pm2.5"]
-            assert row["pm2.5_10minute"] == st["pm2.5_10minute"]
-            assert row["pm2.5_time_stamp"] == st["time_stamp"]
+            assert row["pm2_5_10minute"] == st["pm2.5_10minute"]
         if "stats_a" in payload["sensor"]:
             sa = payload["sensor"]["stats_a"]
-            assert row["pm2.5_a"] == sa["pm2.5"]
-            assert row["pm2.5_1week_a"] == sa["pm2.5_1week"]
-            assert row["time_stamp_a"] == sa["time_stamp"]
+            assert row["pm2_5_a"] == sa["pm2.5"]
+            assert row["pm2_5_1week_a"] == sa["pm2.5_1week"]
         if "stats_b" in payload["sensor"]:
             sb = payload["sensor"]["stats_b"]
-            assert row["pm2.5_30minute_b"] == sb["pm2.5_30minute"]
+            assert row["pm2_5_30minute_b"] == sb["pm2.5_30minute"]
 
 
-@pytest.mark.skipif(not FIXTURE_FILES, reason="reference fixtures unavailable")
 def test_conform_fills_all_accepted_fields(spark):
-    """T3: conform(flatten(payload)) always yields the full registry."""
+    """T3: the decoded payload always yields the full registry."""
     for path in FIXTURE_FILES:
         payload = _load(path)
-        df = X.conform(X.reading_from_json_payload(spark, payload))
-        assert df.columns == [f.api_name for f in S.KEY_FIELDS + S.FIELDS]
+        df = payload_frame(spark, payload)
+        assert df.columns == [f.sql_name for f in S.KEY_FIELDS + S.FIELDS]
         row = df.collect()[0].asDict()
-        # a field absent from every variant payload gets its sentinel
-        for api_name, default in S.ACCEPTED_FIELDS.items():
-            if api_name not in payload["sensor"]:
-                got = row[api_name]
-                if got is not None:  # struct-derived fields may be present
-                    pass
+        # a field the payload does not carry gets its sentinel
+        carried = set(payload["sensor"]) | _stats_derived(payload["sensor"])
+        for f in S.FIELDS:
+            if f.api_name not in carried:
+                assert row[f.sql_name] == f.sentinel, f.api_name
         # spot-check: ozone1 only exists on some variants
         if "ozone1" not in payload["sensor"]:
             assert row["ozone1"] == 0.0
@@ -107,12 +111,12 @@ def test_zip_fields_data(spark):
             [131079, "BRSKBV-outside", 2.25],
         ],
     }
-    df = X.zip_fields_data(spark, payload)
+    df = payload_frame(spark, payload)
     rows = {r["sensor_index"]: r.asDict() for r in df.collect()}
     assert len(rows) == 2
     assert rows[131075]["name"] == "Mariners Bluff"
     assert rows[131075]["data_time_stamp"] == 1659710232
-    assert rows[131079]["pm2.5_atm"] == 2.25
+    assert rows[131079]["pm2_5_atm"] == 2.25
     # conformance ran: unrequested fields are sentinel-filled
     assert rows[131075]["humidity"] == 0
     assert rows[131075]["model"] == ""
@@ -126,7 +130,7 @@ def test_storage_form_and_vertical_split(spark):
         "fields": ["sensor_index", "name", "humidity", "pm2.5_atm", "last_seen"],
         "data": [[1, "a, comma", 40, 1.5, 1659710000]],
     }
-    wide = X.to_storage_form(X.zip_fields_data(spark, payload))
+    wide = X.cast_epoch_to_timestamp(payload_frame(spark, payload))
     assert wide.columns == [f.sql_name for f in S.KEY_FIELDS + S.FIELDS]
     row = wide.collect()[0].asDict()
     assert row["data_time_stamp"].year == 2022
@@ -148,12 +152,12 @@ def test_rename_round_trip(spark):
         "fields": ["sensor_index", "0.3_um_count", "pm10.0_cf_1"],
         "data": [[1, 5.0, 2.0]],
     }
-    df = X.zip_fields_data(spark, payload)
-    renamed = X.rename_to_sql(df)
-    assert "um_count_0_3" in renamed.columns
-    assert "pm10_0_cf_1" in renamed.columns
-    back = X.rename_to_api(renamed)
+    df = payload_frame(spark, payload)
+    assert "um_count_0_3" in df.columns
+    assert "pm10_0_cf_1" in df.columns
+    back = X.rename_to_api(df)
     assert "0.3_um_count" in back.columns
+    assert X.rename_to_sql(back).columns == df.columns
 
 
 def test_snapshot_diff_semantics(spark):
