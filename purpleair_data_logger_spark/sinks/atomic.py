@@ -1,8 +1,9 @@
-"""Crash-safe rewrite protocol for plain-parquet tables.
+"""Crash-safe publish protocol for plain-parquet tables.
 
-Plain parquet has no transaction log, so destructive rewrites
-(`SensorTableStore.upsert_wide`, `.compact`) need their own commit
-protocol; the atomicity unit is POSIX rename(2). Protocol per table:
+Plain parquet has no transaction log, so every store write (appends,
+upserts and compaction, all through `SensorTableStore._publish`) needs
+its own commit protocol; the atomicity unit is POSIX rename(2).
+Protocol per table:
 
 1. The job writes the replacement partitions to ``<live>__staging``
    (a sibling dir, invisible to readers of ``<live>``). Spark's
@@ -54,6 +55,11 @@ store root:
    A reader that heals first therefore sees all members wholly old
    or all wholly new. Tables NOT inside a snapshot keep the
    single-table `heal` semantics unchanged.
+
+Appends stage only the new rows; `keep_live_files` (run while the
+snapshot is PENDING) hard-links each staged partition's existing files
+in, so the swap publishes old ∪ new without rewriting data. A reader
+that does not heal first can miss a partition between its two renames.
 """
 
 from __future__ import annotations
@@ -157,6 +163,20 @@ def commit(live: str) -> None:
     # Commit complete: retract the commit record, then the empty husk.
     FS.remove(os.path.join(staged, SUCCESS_FILE))
     FS.rmtree(staged)
+
+
+def keep_live_files(live: str) -> None:
+    """Hard-link every existing file of each staged partition into the
+    staging dir, so `commit`'s swap publishes old ∪ staged files. Call
+    it while the snapshot is PENDING: a crash mid-link rolls back with
+    the staging. A name collision raises FileExistsError (Spark's
+    part-file names carry the job UUID, so it does not happen)."""
+    fsio.require(FS)
+    staged = staging_path(live)
+    for entry in _partition_entries(staged):
+        live_e = os.path.join(live, entry)
+        for name in FS.listdir(live_e) if FS.isdir(live_e) else []:
+            FS.link(os.path.join(live_e, name), os.path.join(staged, entry, name))
 
 
 def heal(live: str) -> str | None:

@@ -12,8 +12,17 @@ CSV; SURVEY.md §2.8) with partitioned, clustered parquet tables:
   TimescaleDB policy buys, but at write time;
 * PK-duplicate crash (plain INSERT, ``:153-347``) → idempotent
   dedup-on-write (documented deviation, SURVEY.md §7.4);
+* one transaction per reading (``:347``) → every store write (append,
+  upsert, compaction) is one all-or-none `sinks.atomic` snapshot
+  publish (`SensorTableStore._publish`) under the store's single-writer
+  lease; appends reach its partition swap via `atomic.keep_live_files`;
 * retention policy → `apply_retention` partition-drop job;
 * DROP ALL (``PurpleAirPSQLQueryStatements.py:543-553``) → `drop_all`.
+
+A reader that lists a table without healing first can miss a touched
+partition for the instant of its swap, never a torn nine-table state.
+A compaction tick that overlaps an ingest fails with
+`atomic.SnapshotLeaseHeld` instead of racing it.
 
 At 100 TB: the date partition bounds every maintenance job, writes
 shuffle once on sensor_index (well distributed — millions of sensors),
@@ -23,8 +32,11 @@ sensor_index sort within row groups (min/max page stats).
 
 from __future__ import annotations
 
+import datetime as _dt
 import os
 import shutil
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,27 +52,20 @@ class SensorTableStore:
     """Nine partitioned parquet tables rooted at ``base_path``."""
 
     def __init__(
-        self,
-        spark: SparkSession,
-        base_path: str,
-        *,
-        cluster_partitions: int | None = None,
-        files_per_partition: int = 1,
+        self, spark: SparkSession, base_path: str, *, cluster_partitions: int | None = None
     ):
         self.spark = spark
         self.base_path = base_path
         self.cluster_partitions = cluster_partitions
-        self.files_per_partition = files_per_partition
         self.heal()
 
     def heal(self) -> dict[str, str]:
-        """Recover any rewrite a crash interrupted (see `sinks.atomic`).
-        Run on construction and before/after every destructive rewrite;
-        returns {table: action} for the tables that needed repair. A
-        multi-table snapshot (upsert_wide's all-or-none publish) heals
-        FIRST, as a unit — its members must never be healed
-        per-table, or a staged-but-unpublished member would roll
-        forward alone."""
+        """Recover any write a crash interrupted (see `sinks.atomic`).
+        Run on construction and before every write; returns {table:
+        action} for the tables that needed repair. The multi-table
+        snapshot (`_publish`'s all-or-none publish) heals FIRST, as a
+        unit — its members must never be healed per-table, or a
+        staged-but-unpublished member would roll forward alone."""
         actions = {}
         snap = atomic.heal_snapshot(self.base_path)
         if snap:
@@ -80,81 +85,58 @@ class SensorTableStore:
     # -- write path --------------------------------------------------------
 
     def _prepare(self, df: DataFrame) -> DataFrame:
-        """Shuffle ON the partition column (+ a bounded sensor salt), so
-        each output file covers exactly one date: files per table =
-        dates × files_per_partition, independent of task count.
-        Repartitioning on sensor_index instead would emit tasks × dates
-        files (the classic partitioned-write small-file explosion —
-        measured 5x slower at sf0.1). Rows stay clustered by
-        (sensor_index, ts) within each file via the local sort, which is
-        what gives row-group min/max pruning on sensor lookups.
+        """Shuffle ON the partition column, so each output file covers
+        exactly one date: one file per date per table, independent of
+        task count. Repartitioning on sensor_index instead would emit
+        tasks × dates files (the classic partitioned-write small-file
+        explosion — measured 5x slower at sf0.1). Rows stay clustered
+        by (sensor_index, ts) within each file via the local sort,
+        which is what gives row-group min/max pruning on sensor lookups.
         """
         clustered = df.withColumn(
             PARTITION_COL, F.to_date(F.col("data_time_stamp"))
         )
-        salt = F.pmod(
-            F.xxhash64(F.col("sensor_index")), F.lit(self.files_per_partition)
-        )
         n = self.cluster_partitions
-        args = ([n] if n else []) + [F.col(PARTITION_COL), salt]
+        args = ([n] if n else []) + [F.col(PARTITION_COL)]
         return clustered.repartition(*args).sortWithinPartitions(
             PARTITION_COL, "sensor_index", "data_time_stamp"
         )
 
+    @staticmethod
+    def _batch_dates(wide: DataFrame) -> list:
+        day = F.to_date(F.col("data_time_stamp"))
+        return [r[0] for r in wide.select(day).distinct().collect()]
+
     def append_wide(
-        self,
-        wide: DataFrame,
-        *,
-        dedup: bool = True,
-        dedup_against_existing: bool = False,
+        self, wide: DataFrame, *, dedup_against_existing: bool = False
     ) -> None:
-        """Write one wide at-rest frame into all nine tables.
+        """Write one wide at-rest frame into all nine tables, all or none.
 
-        One micro-batch = one write per table (vs the reference's 9
-        INSERTs + commit per reading). ``dedup`` drops PK duplicates
-        within the batch deterministically. ``dedup_against_existing``
-        additionally anti-joins the batch against already-stored keys
-        (R6 exactly-once on re-delivery): the anti-join probes only the
-        date partitions the batch touches — partition pruning keeps it
-        O(batch), not O(table), at any scale.
+        One micro-batch = one staged write per table (vs the reference's
+        9 INSERTs + commit per reading) of the batch's new rows, PK
+        duplicates dropped; `atomic.keep_live_files` links each touched
+        partition's existing files in, so the swap rewrites no data.
+        ``dedup_against_existing`` additionally anti-joins the batch
+        against STATION's stored keys (R6 exactly-once on re-delivery)
+        — they are every table's keys, as writes are all-or-none. The
+        probe reads only the date partitions the batch touches, so it
+        stays O(batch), not O(table), at any scale. Raises
+        `atomic.SnapshotLeaseHeld` while another writer holds the lease;
+        a reader that does not heal can miss a partition mid-swap.
         """
-        if dedup:
-            wide = wide.dropDuplicates(S.KEY_COLUMNS)
-        if dedup_against_existing and os.path.isdir(self.path(S.STATION)):
-            batch_dates = [
-                r[0]
-                for r in wide.select(
-                    F.to_date(F.col("data_time_stamp")).alias("d")
+
+        def build() -> dict[str, DataFrame]:
+            batch = wide.dropDuplicates(S.KEY_COLUMNS)
+            if dedup_against_existing and os.path.isdir(self.path(S.STATION)):
+                existing = (
+                    self.spark.read.parquet(self.path(S.STATION))
+                    .filter(F.col(PARTITION_COL).isin(self._batch_dates(batch)))
+                    .select(*S.KEY_COLUMNS)
                 )
-                .distinct()
-                .collect()
-            ]
-            existing = (
-                self.spark.read.parquet(self.path(S.STATION))
-                .filter(F.col(PARTITION_COL).isin(batch_dates))
-                .select(*S.KEY_COLUMNS)
-            )
-            wide = wide.join(existing, on=S.KEY_COLUMNS, how="left_anti")
-        # Nine narrow pipelines, NOT one cached wide one: Catalyst prunes
-        # each table's pipeline down to its own ~15 columns end-to-end
-        # (scan → transform → shuffle → sort → write all narrow), so the
-        # nine "recomputations" collectively do about one wide frame of
-        # work. Caching the clustered wide frame instead materializes all
-        # 117 columns and defeats pruning — measured 3x slower at sf0.1.
-        # The nine jobs are submitted from driver threads so they share
-        # the executor pool concurrently (narrow jobs rarely saturate
-        # it); append targets are disjoint directories, so ordering is
-        # irrelevant.
-        from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
+                batch = batch.join(existing, on=S.KEY_COLUMNS, how="left_anti")
+            return {t: self._prepare(p) for t, p in vertical_split(batch).items()}
 
-        def _write(item):
-            table, part = item
-            self._prepare(part).write.mode("append").partitionBy(
-                PARTITION_COL
-            ).parquet(self.path(table))
-
-        with ThreadPoolExecutor(max_workers=len(S.TABLE_NAMES)) as pool:
-            list(pool.map(_write, vertical_split(wide).items()))
+        self._publish(build, keep_live=True)
 
     def upsert_wide(self, wide: DataFrame) -> None:
         """Upsert: new readings insert, existing PKs take the batch's
@@ -164,59 +146,63 @@ class SensorTableStore:
         stored rows from those partitions that are NOT in the batch
         survive via anti-join + union. Work is O(touched partitions),
         never O(table) — the parquet equivalent of Delta MERGE for this
-        PK shape. The rewrite goes through `sinks.atomic`: replacement
-        partitions are staged to a sibling dir (readers never see
-        them), then rename-swapped in only after Spark's _SUCCESS
-        commit record exists; a crash at any point leaves every
-        partition wholly old or wholly new, and `heal` finishes or
-        discards the interrupted rewrite.
+        PK shape. The rewrite goes through `_publish`: replacement
+        partitions are staged to sibling dirs (readers never see
+        them), then rename-swapped in only after the snapshot commits;
+        a crash at any point leaves every table wholly old or wholly
+        new, and `heal` finishes or discards the interrupted rewrite.
         """
-        self.heal()
         wide = wide.dropDuplicates(S.KEY_COLUMNS)
-        batch_dates = [
-            r[0]
-            for r in wide.select(F.to_date(F.col("data_time_stamp")).alias("d"))
-            .distinct()
-            .collect()
-        ]
-        # All-or-none across the nine tables (the reference's
+
+        def build() -> dict[str, DataFrame]:
+            batch_dates = self._batch_dates(wide)
+            frames = {}
+            for table, part in vertical_split(wide).items():
+                out = part
+                if os.path.isdir(self.path(table)):
+                    survivors = (
+                        self.spark.read.parquet(self.path(table))
+                        .filter(F.col(PARTITION_COL).isin(batch_dates))
+                        .drop(PARTITION_COL)
+                        .join(
+                            part.select(*S.KEY_COLUMNS),
+                            on=S.KEY_COLUMNS,
+                            how="left_anti",
+                        )
+                    )
+                    out = part.unionByName(survivors)
+                frames[table] = self._prepare(out)
+            return frames
+
+        self._publish(build)
+
+    def _publish(self, build, tables=S.TABLE_NAMES, *, keep_live=False) -> None:
+        """The store's one write path: heal, then stage ``build()``'s
+        laid-out {table: frame} (built under the lease, so the stored
+        rows it reads cannot change before the swap) and publish it
+        into ``tables`` all-or-none; ``keep_live`` for appends."""
+        self.heal()
+        # All-or-none across the tables (the reference's
         # one-transaction contract, PurpleAirPSQLDataLogger.py:347):
         # stage EVERY table first under a _SNAPSHOT_PENDING intent
         # marker, then flip the marker and swap — a reader healing
         # after a crash at ANY point sees reading R in all nine tables
         # or in none, preserving the J1 reconstruction join's
-        # PK-completeness invariant mid-publish. Staging writes are
-        # independent per table, so they share the executor pool from
-        # driver threads like append_wide's.
-        parts = vertical_split(wide)
-        # Single-writer lease (atomic.py): a second concurrent
-        # upsert_wide on the same store fails loudly here instead of
-        # silently interleaving snapshot markers.
+        # PK-completeness invariant mid-publish.
+        # Single-writer lease (atomic.py): a second concurrent writer
+        # on the same store fails loudly here instead of silently
+        # interleaving snapshot markers.
         token = atomic.snapshot_begin(
-            self.base_path, [self.path(t) for t in parts]
+            self.base_path, [self.path(t) for t in tables]
         )
 
         def _stage(item):
-            table, part = item
-            out = part
-            if os.path.isdir(self.path(table)):
-                survivors = (
-                    self.spark.read.parquet(self.path(table))
-                    .filter(F.col(PARTITION_COL).isin(batch_dates))
-                    .drop(PARTITION_COL)
-                    .join(
-                        part.select(*S.KEY_COLUMNS),
-                        on=S.KEY_COLUMNS,
-                        how="left_anti",
-                    )
-                )
-                out = part.unionByName(survivors)
-            self._prepare(out).write.mode("overwrite").partitionBy(
-                PARTITION_COL
-            ).parquet(atomic.staging_path(self.path(table)))
-
-        import threading  # noqa: PLC0415
-        from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
+            table, frame = item
+            frame.write.mode("overwrite").partitionBy(PARTITION_COL).parquet(
+                atomic.staging_path(self.path(table))
+            )
+            if keep_live:
+                atomic.keep_live_files(self.path(table))
 
         # Heartbeat from a TIMER THREAD, not per staged-table
         # completion (ADVICE r7: pool.map yields in submission order,
@@ -244,8 +230,19 @@ class SensorTableStore:
         )
         beater.start()
         try:
-            with ThreadPoolExecutor(max_workers=len(parts)) as pool:
-                list(pool.map(_stage, parts.items()))
+            frames = build()
+            # Nine narrow pipelines, NOT one cached wide one: Catalyst
+            # prunes each table's pipeline down to its own ~15 columns
+            # end-to-end (scan → transform → shuffle → sort → write all
+            # narrow), so the nine "recomputations" collectively do about
+            # one wide frame of work. Caching the clustered wide frame
+            # instead materializes all 117 columns and defeats pruning —
+            # measured 3x slower at sf0.1. The stagings are submitted
+            # from driver threads so they share the executor pool
+            # concurrently (narrow jobs rarely saturate it); their
+            # targets are disjoint directories, so ordering is irrelevant.
+            with ThreadPoolExecutor(max_workers=len(frames)) as pool:
+                list(pool.map(_stage, frames.items()))
         except BaseException:
             # in-process failure: roll the whole snapshot back now
             # (a crash instead would be healed identically on reopen);
@@ -284,49 +281,57 @@ class SensorTableStore:
 
     # -- lifecycle ---------------------------------------------------------
 
+    def _partitions_older_than(self, table: str, days: int, now) -> dict:
+        """{partition dir: date} of ``table``'s date partitions older
+        than ``days`` before ``now`` (default: current UTC time)."""
+        now = now or _dt.datetime.now(_dt.timezone.utc)
+        cutoff = (now - _dt.timedelta(days=days)).date()
+        root = self.path(table)
+        out = {}
+        for entry in sorted(os.listdir(root)) if os.path.isdir(root) else []:
+            if not entry.startswith(f"{PARTITION_COL}="):
+                continue
+            try:
+                d = _dt.date.fromisoformat(entry.split("=", 1)[1])
+            except ValueError:
+                continue
+            if d < cutoff:
+                out[entry] = d
+        return out
+
     def apply_retention(self, table: str, *, keep_days: int, now=None) -> list[str]:
         """R7: drop date partitions older than ``keep_days``. Returns
         dropped partition dirs. Pure partition-prune-and-delete — never
         rewrites surviving data."""
-        import datetime as _dt
-
-        now = now or _dt.datetime.now(_dt.timezone.utc)
-        cutoff = (now - _dt.timedelta(days=keep_days)).date()
-        root = self.path(table)
-        dropped = []
-        if not os.path.isdir(root):
-            return dropped
-        for entry in os.listdir(root):
-            if not entry.startswith(f"{PARTITION_COL}="):
-                continue
-            date_str = entry.split("=", 1)[1]
-            try:
-                d = _dt.date.fromisoformat(date_str)
-            except ValueError:
-                continue
-            if d < cutoff:
-                shutil.rmtree(os.path.join(root, entry))
-                dropped.append(entry)
+        dropped = list(self._partitions_older_than(table, keep_days, now))
+        for entry in dropped:
+            shutil.rmtree(os.path.join(self.path(table), entry))
         return dropped
 
     def compact(self, table: str, *, target_partitions: int) -> None:
         """Compaction job: rewrite a table to ``target_partitions``
         files per date partition (small-file cleanup for long-running
-        streaming appends). Crash-safe via `sinks.atomic`: the full
-        rewrite is staged to a sibling dir, then every date partition is
-        rename-swapped in — an interrupted compaction is healed forward
-        (staging complete) or backward (old files intact), never a loss.
+        streaming appends). Crash-safe as a one-member `_publish`
+        snapshot — an interrupted compaction heals forward or backward,
+        never a loss — that fails with `atomic.SnapshotLeaseHeld`
+        instead of racing a concurrent write.
         """
-        self.heal()
-        df = self.spark.read.parquet(self.path(table))
-        (
-            df.repartition(target_partitions, "sensor_index")
-            .sortWithinPartitions("sensor_index", "data_time_stamp")
-            .write.mode("overwrite")
-            .partitionBy(PARTITION_COL)
-            .parquet(atomic.staging_path(self.path(table)))
-        )
-        atomic.commit(self.path(table))
+        self._compact(table, target_partitions)
+
+    def _compact(self, table: str, target_partitions: int, dates=None) -> None:
+        """Rewrite ``table``'s ``dates`` partitions (all when None)."""
+
+        def build() -> dict[str, DataFrame]:
+            df = self.spark.read.parquet(self.path(table))
+            if dates is not None:
+                df = df.filter(F.col(PARTITION_COL).cast("date").isin(dates))
+            return {
+                table: df.repartition(
+                    target_partitions, "sensor_index"
+                ).sortWithinPartitions("sensor_index", "data_time_stamp")
+            }
+
+        self._publish(build, (table,))
 
     # -- policy catalog (F8) ----------------------------------------------
 
@@ -519,45 +524,19 @@ class SensorTableStore:
     ) -> int:
         """Compression-tier rewrite bounded to COLD date partitions
         (older than ``after_days``): each is rewritten in place to
-        ``target_partitions`` clustered ZSTD files via the crash-safe
-        staged rename. Hot partitions are untouched, so the job's cost
-        is bounded by the cold set, not table size. Returns the number
-        of partitions rewritten."""
-        import datetime as _dt
-
-        now = now or _dt.datetime.now(_dt.timezone.utc)
-        cutoff = (now - _dt.timedelta(days=after_days)).date()
-        root = self.path(table)
-        if not os.path.isdir(root):
+        ``target_partitions`` clustered ZSTD files via `_compact`'s
+        one-member snapshot. Hot partitions are untouched, so the job's
+        cost is bounded by the cold set, not table size. Returns the
+        number of partitions rewritten."""
+        if not os.path.isdir(self.path(table)):
             return 0
         self.heal()
-        cold: list[_dt.date] = []
-        for entry in sorted(os.listdir(root)):
-            if not entry.startswith(f"{PARTITION_COL}="):
-                continue
-            try:
-                d = _dt.date.fromisoformat(entry.split("=", 1)[1])
-            except ValueError:
-                continue
-            if d < cutoff:
-                cold.append(d)
-        if not cold:
-            return 0
-        # the staged rewrite carries ONLY the cold partitions, and the
-        # commit swap is O(staged partitions): hot data is never read,
-        # rewritten, or renamed — the job's cost is the cold set.
-        df = self.spark.read.parquet(root).filter(
-            F.col(PARTITION_COL).cast("date").isin(cold)
-        )
-        (
-            df.repartition(target_partitions, "sensor_index")
-            .sortWithinPartitions("sensor_index", "data_time_stamp")
-            .write.mode("overwrite")
-            .partitionBy(PARTITION_COL)
-            .option("compression", "zstd")
-            .parquet(atomic.staging_path(root))
-        )
-        atomic.commit(root)
+        cold = list(self._partitions_older_than(table, after_days, now).values())
+        if cold:
+            # the staged rewrite carries ONLY the cold partitions, and the
+            # commit swap is O(staged partitions): hot data is never read,
+            # rewritten, or renamed — the job's cost is the cold set.
+            self._compact(table, target_partitions, cold)
         return len(cold)
 
     def drop_all(self, *, confirm: bool) -> None:

@@ -1,13 +1,15 @@
-"""Crash-injection tests for the `sinks.atomic` rewrite protocol:
-every interruption point of upsert/compact must leave a store that a
-fresh `SensorTableStore` (which heals on construction) reads as wholly
-old or wholly new data — never lost or half-written partitions."""
+"""Crash-injection tests for the `sinks.atomic` publish protocol:
+every interruption point of an append/upsert/compact must leave a
+store that a fresh `SensorTableStore` (which heals on construction)
+reads as wholly old or wholly new data — never lost or half-written
+partitions."""
 
 from __future__ import annotations
 
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from purpleair_data_logger_spark import schema as S
@@ -267,3 +269,66 @@ def test_upsert_and_compact_end_to_end_after_crash_history(spark, tmp_path):
     store.compact(S.ENVIRONMENTAL, target_partitions=1)
     assert store.read(S.ENVIRONMENTAL).count() == 3
     assert not os.path.isdir(atomic.staging_path(store.path(S.ENVIRONMENTAL)))
+
+
+def _store_files(base):
+    """Every file under the store root except the snapshot lease and
+    markers: the tables' data, plus any staging left behind."""
+    return sorted(
+        os.path.relpath(os.path.join(root, f), base)
+        for root, _, files in os.walk(base)
+        for f in files
+        if root != base or not f.startswith("_SNAPSHOT")
+    )
+
+
+def _keys(store):
+    return {
+        t: sorted(tuple(r) for r in store.read(t).select(*S.KEY_COLUMNS).collect())
+        for t in S.TABLE_NAMES
+    }
+
+
+def test_failed_append_loses_no_reading_on_redelivery(spark, tmp_path, monkeypatch):
+    """One non-STATION table's staging write fails mid-append: the
+    append rolls back in all nine tables, so the re-delivery's STATION
+    key probe (dedup_against_existing) finds nothing and the reading
+    lands everywhere — not in eight tables, with the ninth one row
+    short and the reading lost from J1 for good."""
+    store = _seeded_store(spark, tmp_path)
+    before = _keys(store)
+    files = _store_files(store.base_path)
+    batch = _wide(spark, BASE_TS + 120, [[1, "s1", 42, 1.7, 0]])
+    victim = set(X.vertical_split(batch)[S.PM1_0].columns)
+    prepare = store._prepare
+
+    def failing_prepare(df):
+        if set(df.columns) == victim:
+            raise RuntimeError("injected pm1_0 staging failure")
+        return prepare(df)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(store, "_prepare", failing_prepare)
+        with pytest.raises(RuntimeError, match="injected"):
+            store.append_wide(batch, dedup_against_existing=True)
+    # rolled back in all nine tables: not one file added or lost
+    reopened = SensorTableStore(spark, store.base_path, cluster_partitions=2)
+    assert _store_files(store.base_path) == files
+
+    reopened.append_wide(batch, dedup_against_existing=True)
+    new_key = tuple(batch.select(*S.KEY_COLUMNS).first())
+    after = _keys(reopened)
+    for t in S.TABLE_NAMES:
+        assert after[t] == sorted(before[t] + [new_key]), t
+    assert reopened.reconstruct_reading().count() == 4
+
+
+def test_append_refused_while_another_writer_holds_the_lease(spark, tmp_path):
+    """The single-writer lease guards appends too: with a live foreign
+    writer mid-snapshot, append_wide fails loudly and lands nothing."""
+    store = _seeded_store(spark, tmp_path)
+    files = _store_files(store.base_path)
+    atomic.snapshot_begin(store.base_path, [], writer_id="other")
+    with pytest.raises(atomic.SnapshotLeaseHeld):
+        store.append_wide(_wide(spark, BASE_TS + 120, [[1, "s1", 42, 1.7, 0]]))
+    assert _store_files(store.base_path) == files

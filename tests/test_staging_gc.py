@@ -76,9 +76,12 @@ class _Injector:
         mp.setattr(atomic, "FS", GatedFS())
 
 
-def _mk_table(base, name, *, staged_success=True):
-    """One table: live partitions d1+d2 (old), staging replaces d1 and
-    adds d3 (new). Returns (live, expected_old, expected_new) trees."""
+def _mk_table(base, name, *, staged_success=True, shape="rewrite", link=True):
+    """One table: live partitions d1+d2 (old). A "rewrite" staging
+    replaces d1 and adds d3 (new); an "append" staging puts a new file
+    next to d1's old one and adds d3 — the old file hard-linked in by
+    `atomic.keep_live_files` (unless ``link=False``, for sweeping the
+    linking itself). Returns (live, expected_old, expected_new) trees."""
     live = os.path.join(base, name)
     for p in ("date=d1", "date=d2"):
         d = os.path.join(live, p)
@@ -96,6 +99,10 @@ def _mk_table(base, name, *, staged_success=True):
             pass
     old = {"date=d1": ["f.old"], "date=d2": ["f.old"]}
     new = {"date=d1": ["f.new"], "date=d2": ["f.old"], "date=d3": ["f.new"]}
+    if shape == "append":
+        new["date=d1"] = ["f.new", "f.old"]
+        if link:
+            atomic.keep_live_files(live)
     return live, old, new
 
 
@@ -240,32 +247,50 @@ def test_snapshot_commit_every_crash_point_all_or_none(tmp_path):
     """snapshot_commit over three tables killed at every mutation
     boundary (marker flip, each member's partition swaps, marker
     retraction, lease release): one recovery cycle leaves zero
-    leaks and ALL members wholly old or ALL wholly new."""
-    budget = 0
-    while True:
-        base = str(tmp_path / f"snap_{budget}")
-        os.makedirs(base)
-        tables = [_mk_table(base, f"t{i}") for i in range(3)]
-        lives = [t[0] for t in tables]
-        atomic.snapshot_begin(base, lives, writer_id="w1")
-        _, crashed = _run_injected(
-            budget, lambda: atomic.snapshot_commit(base, writer_id="w1")
-        )
-        _recover(base, lives)
-        assert _leaks(base) == [], f"budget={budget}"
-        states = {
-            live: ("old" if _tree(live) == old else
-                   "new" if _tree(live) == new else "MIXED")
-            for live, old, new in tables
-        }
-        assert set(states.values()) in ({"old"}, {"new"}), (
-            f"budget={budget}: all-or-none violated: {states}"
-        )
-        if not crashed:
-            assert set(states.values()) == {"new"}
-            break
-        budget += 1
-    assert budget >= 10  # three tables' swaps + markers were all swept
+    leaks and ALL members wholly old or ALL wholly new. Swept for an
+    upsert/compaction rewrite, for an append whose old files
+    keep_live_files already linked in, and for an append whose linking
+    is swept too — a crash at any link (snapshot still PENDING) rolls
+    every member back to old."""
+    for shape, sweep_links in (
+        ("rewrite", False), ("append", False), ("append", True)
+    ):
+        budget = 0
+        while True:
+            base = str(tmp_path / f"snap_{shape}_{sweep_links}_{budget}")
+            os.makedirs(base)
+            lives = [os.path.join(base, f"t{i}") for i in range(3)]
+            atomic.snapshot_begin(base, lives, writer_id="w1")
+            tables = [
+                _mk_table(base, f"t{i}", shape=shape, link=not sweep_links)
+                for i in range(3)
+            ]
+
+            def publish():
+                if sweep_links:
+                    for live in lives:
+                        atomic.keep_live_files(live)
+                atomic.snapshot_commit(base, writer_id="w1")
+
+            _, crashed = _run_injected(budget, publish)
+            _recover(base, lives)
+            where = f"{shape} sweep_links={sweep_links} budget={budget}"
+            assert _leaks(base) == [], where
+            states = {
+                live: ("old" if _tree(live) == old else
+                       "new" if _tree(live) == new else "MIXED")
+                for live, old, new in tables
+            }
+            assert set(states.values()) in ({"old"}, {"new"}), (
+                f"{where}: all-or-none violated: {states}"
+            )
+            if sweep_links and budget < len(lives):  # died mid-link
+                assert set(states.values()) == {"old"}, where
+            if not crashed:
+                assert set(states.values()) == {"new"}
+                break
+            budget += 1
+        assert budget >= 10  # three tables' swaps + markers were all swept
 
 
 def test_snapshot_double_crash_heal_then_heal_again(tmp_path):
