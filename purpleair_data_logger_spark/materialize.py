@@ -1,42 +1,55 @@
-"""Materialize-once seam for within-query reuse points (r14).
+"""The one lineage-truncation seam: every ``localCheckpoint`` /
+``checkpoint`` in the package goes through `materialize_once`, and it
+is the only code that sets a checkpoint directory.
 
-Several operators build an intermediate that is consumed by MORE THAN
-ONE downstream subtree of the same query — the LSH band index (both
-self-join sides), candidate-pair sets (two semi-joins + the fetch
-join), per-doc element-set tables (up to four consumers), phash
-signature tables (band explode + both Hamming-verify sides). Spark
-compiles a shared subplan into every consumer, so without an explicit
-materialization the producing pipeline EXECUTES once per consumer
-(r13 measured 2-6 scans/aggregate pipelines per query).
+Its callers are of three kinds:
 
-The r13 fix was a bare ``localCheckpoint(eager=False)`` at each site.
-That is the right local/bench default (zero extra I/O, blocks live in
-executor storage), but local-checkpoint blocks have NO lineage
-fallback: on a real cluster an executor loss — or a dynamic-allocation
-decommission — mid-query makes the job unrecoverable instead of
-recomputing the lost partitions (VERDICT r13 #2). This module is the
-one injectable seam those sites now go through:
+* within-query reuse points — an intermediate consumed by MORE THAN
+  ONE downstream subtree of the same query (the LSH band index, both
+  self-join sides; candidate-pair sets; per-doc element-set tables;
+  phash signature tables). Spark compiles a shared subplan into every
+  consumer, so without an explicit materialization the producing
+  pipeline EXECUTES once per consumer (r13 measured 2-6 scans per
+  query);
+* per-round truncation in the fixpoint loops (`clusters`, `graph`,
+  `aggregations.frequent_items`), so plans do not grow with the round
+  count;
+* stream state carried across triggers (`streaming/neardup.py`,
+  `streaming/phash.py`, `streaming/curation.py`: base artifacts, folded
+  indexes, recent windows, the per-batch frame that feeds several
+  sinks). These pass ``eager=True``: the state must be stored before
+  the trigger commits, not at some later trigger's first use.
 
-* default: ``localCheckpoint(eager=False)`` — single-node / bench /
-  tests, where executor loss == driver loss anyway;
+One setting decides the posture for all of them:
+
+* default: ``localCheckpoint`` — single-node / bench / tests, where
+  executor loss == driver loss anyway (zero extra I/O, blocks live in
+  executor storage). Local-checkpoint blocks have NO lineage fallback:
+  on a real cluster an executor loss mid-query — or mid-stream, for
+  fold state — is unrecoverable (VERDICT r13 #2);
 * ``SPARK_GRAFT_CHECKPOINT_DIR=<cluster-visible path>``: reliable
-  ``df.checkpoint(eager=False)`` into that directory — a lost executor
-  recomputes its partitions from the checkpoint files, the posture a
-  100 TB deployment runs with (SCALE.md "Materialize-once sites").
+  ``df.checkpoint`` into that directory — a lost executor recomputes
+  its partitions from the checkpoint files, the posture a 100 TB
+  deployment runs with (SCALE.md "Materialize-once sites"). The
+  context's checkpoint dir is re-pointed whenever it is not under the
+  configured path, so a restarted context or a foreign
+  ``setCheckpointDir`` cannot divert the files.
 
-Lazy either way: the stored plan is truncated at first use, so
-plan-census tooling that only compiles still runs no jobs, and the
-materialization happens inside the first consuming job rather than as
-an extra eager job.
+Non-streaming callers stay lazy: the stored plan is truncated at first
+use, so plan-census tooling that only compiles still runs no jobs, and
+the materialization happens inside the first consuming job rather than
+as an extra eager job.
 
-Lifecycle note (ADVICE r13): checkpointed blocks are freed by the
-ContextCleaner once the RDD handle is garbage-collected; sessions built
+Lifecycle: checkpointed blocks and files are freed by the
+ContextCleaner once the RDD handle is garbage-collected. Sessions built
 by `session.get_spark` bound the wait with
-``spark.cleaner.periodicGC.interval`` (default 1min there, overridable
-via ``SPARK_GRAFT_PERIODIC_GC``). Library callers embedding these
-operators in a foreign SparkSession inherit Spark's 30-min default and
-should either set the interval themselves or unpersist at their own
-query boundaries.
+``spark.cleaner.periodicGC.interval`` (1min there, overridable via
+``SPARK_GRAFT_PERIODIC_GC``) and set
+``spark.cleaner.referenceTracking.cleanCheckpoints=true``, without
+which reliable checkpoint files are kept forever and per-trigger
+stream state grows without bound. Library callers embedding these
+operators in a foreign SparkSession inherit Spark's defaults (30-min
+GC interval, checkpoint files kept) and should set both themselves.
 """
 
 from __future__ import annotations
@@ -48,10 +61,8 @@ from pyspark.sql import DataFrame
 
 #: Cluster deployments set this to an HDFS/S3/cluster-visible path to
 #: swap every materialize-once site from executor-memory localCheckpoint
-#: to reliable checkpoint files (read once per process change below).
+#: to reliable checkpoint files.
 CHECKPOINT_DIR_ENV = "SPARK_GRAFT_CHECKPOINT_DIR"
-
-_dir_set_for: str | None = None
 
 
 def checkpoint_dir() -> str | None:
@@ -61,10 +72,28 @@ def checkpoint_dir() -> str | None:
     return os.environ.get(CHECKPOINT_DIR_ENV) or None
 
 
-def materialize_once(df: DataFrame, *, serialized: bool = False) -> DataFrame:
-    """Truncate ``df``'s lineage and store its rows at first use, so
-    every downstream consumer scans the stored rows instead of
-    re-executing the producing pipeline.
+def _point_context_at(sc, reliable: str) -> None:
+    """Make ``sc`` checkpoint under ``reliable``. `setCheckpointDir`
+    creates a fresh ``<dir>/<uuid>`` child, so it runs only when the
+    context's current dir is not already such a child (compared as
+    qualified Hadoop paths, the form Spark reports it in)."""
+    current = sc.getCheckpointDir()
+    Path = sc._jvm.org.apache.hadoop.fs.Path
+    want = Path(reliable)
+    want = want.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(want)
+    if current is None or Path(current).getParent().toString() != want.toString():
+        sc.setCheckpointDir(reliable)
+
+
+def materialize_once(
+    df: DataFrame, *, serialized: bool = False, eager: bool = False
+) -> DataFrame:
+    """Truncate ``df``'s lineage and store its rows, so every
+    downstream consumer scans the stored rows instead of re-executing
+    the producing pipeline.
+
+    ``eager=True`` stores the rows now (one job) instead of at first
+    use — only stream state carried across triggers needs that.
 
     ``serialized=True`` stores compact serialized blocks
     (StorageLevel.MEMORY_AND_DISK — PySpark's name for the serialized
@@ -74,16 +103,12 @@ def materialize_once(df: DataFrame, *, serialized: bool = False) -> DataFrame:
     honored on the local path; reliable checkpoints are files and have
     no in-memory object form to begin with.
     """
-    global _dir_set_for
     reliable = checkpoint_dir()
     if reliable:
-        sc = df.sparkSession.sparkContext
-        if _dir_set_for != reliable:
-            sc.setCheckpointDir(reliable)
-            _dir_set_for = reliable
-        return df.checkpoint(eager=False)
+        _point_context_at(df.sparkSession.sparkContext, reliable)
+        return df.checkpoint(eager=eager)
     if serialized:
         return df.localCheckpoint(
-            eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
+            eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK
         )
-    return df.localCheckpoint(eager=False)
+    return df.localCheckpoint(eager=eager)

@@ -19,6 +19,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from purpleair_data_logger_spark.materialize import materialize_once
+
 
 def time_bucket(ts: Column | str, seconds: int) -> Column:
     """Epoch-aligned tumbling bucket start, as a timestamp.
@@ -798,7 +800,6 @@ def frequent_items(
     value_col: str,
     *,
     support_bp: int,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Exact heavy hitters: every value whose global frequency is at
     least ``support_bp`` basis points of the non-null rows, with its
@@ -830,12 +831,6 @@ def frequent_items(
     (cnt·10⁴ ≥ support_bp·N) — no float epsilon, engine-portable.
     Output: (value_col, n_occurrences, n_total, freq) where freq is
     the one final double division.
-
-    ``checkpoint_dir``: the candidate stats frame is materialized once
-    (read twice: total + candidate set). Default is executor-memory
-    ``localCheckpoint``; pass a cluster-visible directory for reliable
-    ``df.checkpoint()`` on long-running cluster jobs (the
-    `operators.clusters` durability argument).
     """
     from pyspark.sql import types as T
 
@@ -869,11 +864,7 @@ def frequent_items(
     # small by the candidate bound; materialized once because it is
     # read twice (total + candidate set) and recomputing would rescan
     # the corpus
-    from purpleair_data_logger_spark.operators.clusters import _checkpointer
-
-    stats = _checkpointer(src, checkpoint_dir)(
-        src.mapInPandas(gen, stats_schema)
-    )
+    stats = materialize_once(src.mapInPandas(gen, stats_schema))
     n_total = (
         stats.filter(F.col(name).isNull()).agg(F.sum("_cnt")).collect()[0][0]
     )
@@ -913,7 +904,6 @@ def grouped_frequent_items(
     value_col: str,
     *,
     support_bp: int,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Per-group exact heavy hitters: within each group, every value
     at ≥ ``support_bp`` basis points of the group's non-null rows —
@@ -940,9 +930,7 @@ def grouped_frequent_items(
 
     groups = [str(g) for g in group_cols]
     if not groups:
-        return frequent_items(
-            df, value_col, support_bp=support_bp, checkpoint_dir=checkpoint_dir
-        )
+        return frequent_items(df, value_col, support_bp=support_bp)
     src = df.select(*groups, value_col).filter(F.col(value_col).isNotNull())
     for g in groups:
         src = src.filter(F.col(g).isNotNull())
@@ -986,11 +974,7 @@ def grouped_frequent_items(
             ignore_index=True,
         )
 
-    from purpleair_data_logger_spark.operators.clusters import _checkpointer
-
-    stats = _checkpointer(src, checkpoint_dir)(
-        src.mapInPandas(gen, stats_schema)
-    )
+    stats = materialize_once(src.mapInPandas(gen, stats_schema))
     totals = (
         stats.filter(F.col(name).isNull())
         .groupBy(*groups)

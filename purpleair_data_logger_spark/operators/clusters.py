@@ -16,10 +16,13 @@ O(component diameter) rounds. Near-dup graphs are dense little
 cliques-with-bridges (diameter 2-4 in practice), so propagation
 converges in a handful of rounds; each round is one shuffle-bounded
 equi-join + a map-side-combinable min-aggregate, and lineage is
-truncated per round so the plan doesn't grow superlinearly — via
-``localCheckpoint`` by default, or reliable ``df.checkpoint()`` into a
-caller-supplied ``checkpoint_dir`` for cluster runs where an executor
-loss must not kill the multi-round job (see `_checkpointer`). For adversarial high-diameter graphs (long chains)
+truncated per round so the plan doesn't grow superlinearly — through
+`materialize.materialize_once`, so ``SPARK_GRAFT_CHECKPOINT_DIR``
+switches the rounds to reliable checkpoints for cluster runs where an
+executor loss must not kill the multi-round job. Each round's
+truncation is lazy: the convergence probe that follows it (a
+sum/checksum collect) materializes and stores the round in the same
+job. For adversarial high-diameter graphs (long chains)
 `connected_components_star` implements the alternating
 large-star/small-star algorithm (Kiveris et al., "Connected Components
 in MapReduce and Beyond", SoCC'14), which converges in O(log² n)
@@ -38,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from purpleair_data_logger_spark.materialize import materialize_once
+
 # r14 negative result (VERDICT r13 #6): planning the fixpoint ROUNDS
 # with AQE disabled (scoped spark.sql.adaptive.enabled=false around
 # the loops, restored after) was built and A/B'd twice. A sequential
@@ -52,46 +57,12 @@ from pyspark.sql import functions as F
 # inheriting the session's accumulated GC pressure).
 
 
-def _checkpointer(df_sample: DataFrame, checkpoint_dir: str | None):
-    """Per-round lineage truncation strategy.
-
-    ``checkpoint_dir=None`` (default): ``localCheckpoint`` — blocks
-    live in executor storage, zero extra I/O, right for interactive /
-    single-node runs. BUT executor-held blocks die with the executor:
-    on a 1000-executor cluster one preempted node kills the whole
-    20-round job (round-4 verdict #2). Production runs pass a
-    reliable ``checkpoint_dir`` (HDFS/S3/cluster-visible path): rounds
-    then persist via ``df.checkpoint()`` and a lost executor only
-    recomputes its own partitions from the checkpoint files.
-    """
-    if checkpoint_dir is None:
-        # Lazy (r13): every per-round ckpt here is immediately followed
-        # by the convergence-probe action (sum/checksum collect), which
-        # materializes-and-stores the round in the SAME job — eager=True
-        # was paying one extra job per round just to materialize first.
-        # Lineage is still truncated at materialization, so per-round
-        # plans stay shallow. Via the shared seam (r14): with
-        # SPARK_GRAFT_CHECKPOINT_DIR set, rounds checkpoint reliably
-        # even when the caller passed no explicit directory.
-        from purpleair_data_logger_spark.materialize import materialize_once
-
-        return materialize_once
-    from purpleair_data_logger_spark import materialize
-
-    sc = df_sample.sparkSession.sparkContext
-    sc.setCheckpointDir(checkpoint_dir)
-    # the context's checkpoint dir just changed under the seam's cache
-    materialize._dir_set_for = None
-    return lambda df: df.checkpoint(eager=True)
-
-
 def connected_components(
     edges: DataFrame,
     src_col: str,
     dst_col: str,
     *,
     max_iter: int = 25,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Resolve the undirected graph in ``edges`` to components.
 
@@ -100,15 +71,8 @@ def connected_components(
     engine-portable canonical label. Nodes absent from ``edges``
     (singletons) are simply not emitted; join back to the corpus with
     a left join + coalesce(cluster_id, id) (see `cluster_dedup`).
-
-    ``checkpoint_dir``: when set, per-round lineage truncation uses
-    reliable ``df.checkpoint()`` into that cluster-visible directory
-    instead of executor-memory ``localCheckpoint`` — survival of a
-    multi-round job no longer depends on every executor surviving
-    (see `_checkpointer`). Labels are identical either way.
     """
-    ckpt = _checkpointer(edges, checkpoint_dir)
-    adj = ckpt(
+    adj = materialize_once(
         edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
         .union(edges.select(F.col(dst_col).alias("u"), F.col(src_col).alias("v")))
         .distinct()
@@ -116,7 +80,7 @@ def connected_components(
         # this the whole upstream pipeline (e.g. LSH mining) would be
         # recomputed per round.
     )
-    labels = ckpt(
+    labels = materialize_once(
         adj.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
@@ -128,7 +92,7 @@ def connected_components(
         propagated = adj.join(
             labels, adj["u"] == labels["node"], "inner"
         ).select(F.col("v").alias("node"), F.col("label"))
-        labels = ckpt(
+        labels = materialize_once(
             labels.select("node", "label")
             .union(propagated)
             .groupBy("node")
@@ -156,7 +120,6 @@ def connected_components_star(
     *,
     max_iter: int = 25,
     stats: dict | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -178,16 +141,14 @@ def connected_components_star(
     propagation (monotone non-increasing edge-endpoint sum).
 
     Returns (node, cluster_id) for every edge-incident node, identical
-    to `connected_components`. ``checkpoint_dir`` selects reliable
-    per-round checkpointing exactly as in `connected_components`.
+    to `connected_components`.
     """
-    ckpt = _checkpointer(edges, checkpoint_dir)
-    base = ckpt(
+    base = materialize_once(
         edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    nodes = ckpt(
+    nodes = materialize_once(
         base.select(F.col("u").alias("node"))
         .union(base.select(F.col("v").alias("node")))
         .distinct()
@@ -243,7 +204,7 @@ def connected_components_star(
     converged = base.isEmpty()
     rounds = 0
     for _ in range(max_iter):
-        e = ckpt(small_star(large_star(e)))
+        e = materialize_once(small_star(large_star(e)))
         rounds += 1
         cur = checksum(e)
         if cur == prev:
@@ -289,7 +250,6 @@ def cluster_dedup(
     src_col: str = "doc_id_a",
     dst_col: str = "doc_id_b",
     prefer: list[Column] | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Canonical-document selection over near-dup pairs.
 
@@ -314,9 +274,7 @@ def cluster_dedup(
     ``prefer``, the survivor-selection window runs over the clustered
     subset only, never the full corpus.
     """
-    cc = connected_components(
-        pairs, src_col, dst_col, checkpoint_dir=checkpoint_dir
-    )
+    cc = connected_components(pairs, src_col, dst_col)
     if prefer is None:
         out = df.join(cc, df[id_col] == cc["node"], "left")
         cluster = F.coalesce(F.col("cluster_id"), F.col(id_col))

@@ -36,8 +36,9 @@ truncated) adjacency list with the current ranks on the source key,
 one map-side-combinable BIGINT sum grouped on the destination key —
 two shuffles per round, no windows, no Python, no collect of rank
 vectors. Lineage truncates per round exactly as the connected-
-components loop does (`clusters._checkpointer`): ``localCheckpoint``
-single-node, reliable ``df.checkpoint()`` for cluster runs.
+components loop does, through `materialize.materialize_once`:
+executor-memory blocks single-node, reliable checkpoint files for
+cluster runs.
 """
 
 from __future__ import annotations
@@ -45,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from purpleair_data_logger_spark.operators.clusters import _checkpointer
+from purpleair_data_logger_spark.materialize import materialize_once
 
 #: 1e9 fixed-point unit: rank 1.0 == 1_000_000_000.
 DEFAULT_SCALE = 10**9
@@ -60,7 +61,6 @@ def pagerank(
     damping_pct: int = 85,
     scale: int = DEFAULT_SCALE,
     directed: bool = False,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Fixed-iteration integer PageRank over ``edges``.
 
@@ -85,17 +85,16 @@ def pagerank(
     ).filter(F.col("u").isNotNull() & F.col("v").isNotNull())
     if not directed:
         e = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    ckpt = _checkpointer(edges, checkpoint_dir)
     dedup = e.distinct()
     deg = dedup.groupBy("u").agg(F.count(F.lit(1)).alias("_deg"))
     # Fold the out-degree INTO the adjacency once — the per-round loop
     # then pays ONE equi-join (adj ⋈ ranks), not two; at 8-10 rounds
     # that halves the join count of the whole job.
-    adj = ckpt(dedup.join(deg, "u").select("u", "v", "_deg"))
+    adj = materialize_once(dedup.join(deg, "u").select("u", "v", "_deg"))
     # Node set = every node WITH out-edges (after symmetrization that is
     # every node incident to an edge; directed dangling DESTINATIONS
     # still receive mass through the join each round).
-    ranks = ckpt(
+    ranks = materialize_once(
         adj.select(F.col("u").alias("node"))
         .union(adj.select(F.col("v").alias("node")))
         .distinct()
@@ -111,7 +110,7 @@ def pagerank(
     # the join and its per-round broadcast build were a second
     # exchange the aggregate can absorb). Σ(shares)+0 ≡
     # coalesce(Σshares, 0), so ranks are bit-identical.
-    zero_shares = ckpt(
+    zero_shares = materialize_once(
         ranks.select("node").withColumn(
             "_share", F.lit(0).cast("long")
         )
@@ -124,7 +123,7 @@ def pagerank(
                 F.expr("rank DIV _deg").alias("_share"),
             )
         )
-        ranks = ckpt(
+        ranks = materialize_once(
             zero_shares.union(shares)
             .groupBy("node")
             .agg(
@@ -137,13 +136,7 @@ def pagerank(
     return ranks
 
 
-def triangle_stats(
-    edges: DataFrame,
-    src_col: str,
-    dst_col: str,
-    *,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+def triangle_stats(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
     """Exact global triangle census of the undirected graph: one row
     (n_nodes, n_edges, n_wedges, n_triangles, gcc_ppm, gcc) where
     gcc = 3·triangles / wedges is the global clustering coefficient
@@ -161,13 +154,12 @@ def triangle_stats(
 
     Scale shape: two equi-joins over the oriented edge list (wedge
     build + closure probe) plus degree/wedge aggregates — all
-    map-side combinable; the edge list is checkpoint-materialized once
-    (`clusters._checkpointer`) so its upstream mining pipeline is not
-    re-executed per reference. NULL/self-loop edges carry no
+    map-side combinable; the edge list is materialized once
+    (`materialize.materialize_once`) so its upstream mining pipeline
+    is not re-executed per reference. NULL/self-loop edges carry no
     observation.
     """
-    ckpt = _checkpointer(edges, checkpoint_dir)
-    und = ckpt(
+    und = materialize_once(
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).cast("long").alias("a"),
             F.greatest(F.col(src_col), F.col(dst_col)).cast("long").alias("b"),
@@ -184,7 +176,7 @@ def triangle_stats(
     )
     da = deg.select(F.col("node").alias("a"), F.col("d").alias("_da"))
     db = deg.select(F.col("node").alias("b"), F.col("d").alias("_db"))
-    oriented = ckpt(
+    oriented = materialize_once(
         und.join(da, "a")
         .join(db, "b")
         .select(
@@ -238,7 +230,6 @@ def bfs_hops(
     *,
     max_hops: int = 12,
     directed: bool = False,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Multi-source BFS: (node, hops) = the minimum hop count from any
     source node, for every node within ``max_hops`` (unreached nodes
@@ -258,15 +249,14 @@ def bfs_hops(
     settled, one distinct — no windows, no Python. State = the settled
     set, bounded by |reachable nodes|.
     """
-    ckpt = _checkpointer(edges, checkpoint_dir)
     e = edges.select(
         F.col(src_col).cast("long").alias("u"),
         F.col(dst_col).cast("long").alias("v"),
     ).filter(F.col("u").isNotNull() & F.col("v").isNotNull())
     if not directed:
         e = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    adj = ckpt(e.distinct())
-    settled = ckpt(
+    adj = materialize_once(e.distinct())
+    settled = materialize_once(
         sources.select(F.col(source_col).cast("long").alias("node"))
         .filter(F.col("node").isNotNull())  # NULL carries no observation
         .distinct()
@@ -285,7 +275,7 @@ def bfs_hops(
             .join(settled.select("node"), "node", "left_anti")
             .withColumn("hops", F.lit(hop).cast("long"))
         )
-        nxt = ckpt(nxt)
+        nxt = materialize_once(nxt)
         if nxt.isEmpty():
             break
         # Re-checkpointing the accumulated set each round costs
@@ -294,7 +284,7 @@ def bfs_hops(
         # SLOWER at sf0.1: every later round's anti-join re-scans k
         # stored RDDs instead of one, and the convergence probe pays
         # the same union again (r13 A/B, kept the materialized form).
-        settled = ckpt(settled.unionByName(nxt))
+        settled = materialize_once(settled.unionByName(nxt))
         frontier = nxt
     return settled
 
@@ -310,7 +300,6 @@ def shortest_paths(
     directed: bool = False,
     max_rounds: int = 64,
     max_dist: int | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Multi-source WEIGHTED shortest paths: (node, dist) = the minimum
     total edge cost from any source node, for every reachable node —
@@ -344,7 +333,6 @@ def shortest_paths(
     Parallel edges collapse to their cheapest weight up front, halving
     the per-round join input on multigraphs.
     """
-    ckpt = _checkpointer(edges, checkpoint_dir)
     wgt = F.col(weight_col).cast("long")
     u_e = F.col(src_col).cast("long")
     v_e = F.col(dst_col).cast("long")
@@ -396,8 +384,8 @@ def shortest_paths(
     )
     if not directed:
         e = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"), "w"))
-    adj = ckpt(e.groupBy("u", "v").agg(F.min("w").alias("w")))
-    dist = ckpt(
+    adj = materialize_once(e.groupBy("u", "v").agg(F.min("w").alias("w")))
+    dist = materialize_once(
         sources.select(F.col(source_col).cast("long").alias("node"))
         .filter(F.col("node").isNotNull())  # NULL carries no observation
         .distinct()
@@ -414,7 +402,7 @@ def shortest_paths(
         if max_dist is not None:
             cand = cand.filter(F.col("_cand") <= int(max_dist))
         cand = cand.groupBy("node").agg(F.min("_cand").alias("_cand"))
-        improved = ckpt(
+        improved = materialize_once(
             cand.join(
                 dist.select("node", F.col("dist").alias("_cur")), "node", "left"
             )
@@ -423,7 +411,7 @@ def shortest_paths(
         )
         if improved.isEmpty():
             return dist
-        dist = ckpt(
+        dist = materialize_once(
             dist.unionByName(improved)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
@@ -443,7 +431,6 @@ def kcore(
     *,
     k: int,
     max_iter: int = 100,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """The k-CORE of the undirected graph: the maximal subgraph in
     which every node has degree >= k — the standard "dense kernel"
@@ -469,7 +456,6 @@ def kcore(
     exceeding ``max_iter`` RAISES rather than returning a partial
     core.
     """
-    ckpt = _checkpointer(edges, checkpoint_dir)
     e = edges.select(
         F.col(src_col).cast("long").alias("u"),
         F.col(dst_col).cast("long").alias("v"),
@@ -477,13 +463,15 @@ def kcore(
         F.col("u").isNotNull() & F.col("v").isNotNull()
         & (F.col("u") != F.col("v"))
     )
-    adj = ckpt(e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct())
+    adj = materialize_once(
+        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
+    )
     for _ in range(max_iter):
         deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("_d"))
         low = deg.filter(F.col("_d") < k).select("u")
         if low.isEmpty():
             return adj.select(F.col("u").alias("node")).distinct()
-        adj = ckpt(
+        adj = materialize_once(
             adj.join(low, "u", "left_anti")
             .join(low.select(F.col("u").alias("v")), "v", "left_anti")
         )

@@ -495,11 +495,15 @@ def cosine_neardup_lsh_verified(
         # the fetch projection): a hoisted norm column lets Catalyst
         # infer isnotnull(norm) from the threshold filter and push the
         # whole 64-element fold BELOW the candidate semi-join — every
-        # corpus row would pay it (r14 plan dump).
+        # corpus row would pay it (r14 plan dump). Each side keeps one
+        # vector per id, as the default form's pair dropDuplicates does:
+        # a repeated id would otherwise multiply its pairs.
         def side(pair_col: str, vec_out: str) -> DataFrame:
             ids = pairs.select(F.col(pair_col).alias(id_col))
-            return base.join(ids, id_col, "left_semi").select(
-                F.col(id_col).alias("_sid"), F.col("_v").alias(vec_out)
+            return (
+                base.join(ids, id_col, "left_semi")
+                .dropDuplicates([id_col])
+                .select(F.col(id_col).alias("_sid"), F.col("_v").alias(vec_out))
             )
 
         pairs = (

@@ -57,6 +57,11 @@ def get_spark(app_name: str = "purpleair-spark", *, shuffle_partitions: int | No
             "spark.cleaner.periodicGC.interval",
             os.environ.get("SPARK_GRAFT_PERIODIC_GC", "1min"),
         )
+        # Reliable checkpoints (materialize.py with
+        # SPARK_GRAFT_CHECKPOINT_DIR set) write files that Spark keeps
+        # forever by default; per-trigger stream state would then grow
+        # without bound. Delete them with their RDD, like local blocks.
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()

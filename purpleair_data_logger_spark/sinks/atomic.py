@@ -349,7 +349,7 @@ def release_lease(base: str, owner: str | None = None) -> bool:
 
 def snapshot_heartbeat(base: str) -> bool:
     """Refresh the lease mtime; long-running stagings call this (from
-    a timer thread, see `SensorTableStore.upsert_wide`) so a live
+    a timer thread, see `SensorTableStore._publish`) so a live
     writer is never mistaken for a crashed one. Returns False instead
     of raising when the lease file is gone (reclaimed mid-staging) —
     the LOUD failure belongs to the commit-time ownership check

@@ -135,6 +135,7 @@ def _fetch(options: dict) -> dict:
             key,
             options.get("fields", "sensor_index,name"),
             location_type=_opt_int(options, "location_type"),
+            read_keys=options.get("read_keys"),
             show_only=options.get("show_only"),
             modified_since=_opt_int(options, "modified_since"),
             max_age=_opt_int(options, "max_age"),

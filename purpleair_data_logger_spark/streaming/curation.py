@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from purpleair_data_logger_spark.materialize import materialize_once
 from purpleair_data_logger_spark.operators import pii
 from purpleair_data_logger_spark.operators import sampling as smp
 from purpleair_data_logger_spark.operators import text as tx
@@ -191,24 +192,24 @@ def run_corpus_build_stream(
 
     if vocabulary_df is not None:
         # materialize the frozen id space once — not per micro-batch
-        vocabulary_df = vocabulary_df.select(
-            "vocab_rank", "tok"
-        ).localCheckpoint()
+        vocabulary_df = materialize_once(
+            vocabulary_df.select("vocab_rank", "tok"), eager=True
+        )
 
     bench_grams = None
     if benchmark_df is not None:
-        bench_grams = (
+        bench_grams = materialize_once(
             benchmark_df.select(
                 F.explode(shingles(text_col, contamination_ngram)).alias("_ng")
-            )
-            .distinct()
-            .localCheckpoint()
+            ).distinct(),
+            eager=True,
         )
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.localCheckpoint()  # curate once, feed all sinks
+        # curate once, feed all sinks
+        batch_df = materialize_once(batch_df, eager=True)
         if bench_grams is not None:
-            hits = (
+            hits = materialize_once(
                 batch_df.select(
                     id_col,
                     F.explode(
@@ -217,8 +218,8 @@ def run_corpus_build_stream(
                 )
                 .join(F.broadcast(bench_grams), on="_ng")
                 .select(id_col)
-                .distinct()
-                .localCheckpoint()
+                .distinct(),
+                eager=True,
             )
             batch_df.join(hits, on=id_col, how="inner").write.mode(
                 "append"

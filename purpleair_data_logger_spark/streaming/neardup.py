@@ -58,6 +58,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from purpleair_data_logger_spark.materialize import materialize_once
 from purpleair_data_logger_spark.operators.dedup import (
     PrefixIndex,
     _prefix_sets,
@@ -98,26 +99,25 @@ def build_base_artifacts(
     shingle_n: int = 3,
     hash_family: str = "xxhash64",
 ) -> tuple[DataFrame, DataFrame]:
-    """(band index, shingle table) for a base corpus, materialized via
-    localCheckpoint so the stream never recomputes them per trigger.
-    Production equivalent: the bucketed parquet artifacts the batch
+    """(band index, shingle table) for a base corpus, materialized
+    eagerly (`materialize_once`) so the stream never recomputes them per
+    trigger. Production equivalent: the bucketed parquet artifacts the batch
     pipeline maintains (tests/test_bucketed.py pins the zero-exchange
     join against the bucketed form)."""
-    index = (
+    index = materialize_once(
         lsh_banded(
             base_df, id_col, text_col,
             num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
             hash_family=hash_family,
-        )
-        .select(F.col(id_col).alias("base_doc_id"), "band_idx", "band_hash")
-        .localCheckpoint()
+        ).select(F.col(id_col).alias("base_doc_id"), "band_idx", "band_hash"),
+        eager=True,
     )
-    sh = (
+    sh = materialize_once(
         base_df.select(
             F.col(id_col).alias("base_doc_id"),
             shingles(text_col, shingle_n).alias("_sh_b"),
-        )
-        .localCheckpoint()
+        ),
+        eager=True,
     )
     return index, sh
 
@@ -184,9 +184,10 @@ def run_incremental_neardup_stream(
             keep_buckets_within_cap,
         )
 
-        base_index = keep_buckets_within_cap(
-            base_index, max_base_bucket_size
-        ).localCheckpoint()
+        base_index = materialize_once(
+            keep_buckets_within_cap(base_index, max_base_bucket_size),
+            eager=True,
+        )
     st: dict = {
         "index": base_index, "sh": base_sh, "pending": [],
         "recent_idx": None, "recent_sh": None,
@@ -227,7 +228,7 @@ def run_incremental_neardup_stream(
     def post_batch(fresh_df: DataFrame, batch_id: int) -> None:
         if fold_every is not None:
             st["pending"].append(
-                fresh_df.select(id_col, text_col).localCheckpoint()
+                materialize_once(fresh_df.select(id_col, text_col), eager=True)
             )
             if len(st["pending"]) >= fold_every:
                 add = st["pending"][0]
@@ -246,8 +247,8 @@ def run_incremental_neardup_stream(
                     idx2 = keep_buckets_within_cap(
                         idx2, max_base_bucket_size
                     )
-                st["index"] = idx2.localCheckpoint()
-                st["sh"] = sh2.localCheckpoint()
+                st["index"] = materialize_once(idx2, eager=True)
+                st["sh"] = materialize_once(sh2, eager=True)
                 st["pending"] = []
                 if skew_check:
                     from purpleair_data_logger_spark.operators.dedup import (  # noqa: PLC0415
@@ -258,7 +259,9 @@ def run_incremental_neardup_stream(
                         "batch_id", F.lit(batch_id)
                     ).write.mode("append").parquet(f"{out_dir}/skew")
         if recent_window_batches is not None:
-            fresh_c = fresh_df.select(id_col, text_col).localCheckpoint()
+            fresh_c = materialize_once(
+                fresh_df.select(id_col, text_col), eager=True
+            )
             add_idx, add_sh = _fresh_rows(fresh_c)
             add_idx = add_idx.withColumn("_bid", F.lit(batch_id))
             add_sh = add_sh.withColumn("_bid", F.lit(batch_id))
@@ -268,8 +271,8 @@ def run_incremental_neardup_stream(
             else:
                 ri = st["recent_idx"].filter(keep).unionByName(add_idx)
                 rs = st["recent_sh"].filter(keep).unionByName(add_sh)
-            st["recent_idx"] = ri.localCheckpoint()
-            st["recent_sh"] = rs.localCheckpoint()
+            st["recent_idx"] = materialize_once(ri, eager=True)
+            st["recent_sh"] = materialize_once(rs, eager=True)
 
     post = post_batch if (fold_every or recent_window_batches) else None
     return _run_ingest_dedup_stream(
@@ -309,8 +312,9 @@ def _run_ingest_dedup_stream(
     )
 
     def _mine_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.localCheckpoint()  # one mining pass, two sinks
-        pairs = mine(batch_df).localCheckpoint()
+        # one mining pass, two sinks
+        batch_df = materialize_once(batch_df, eager=True)
+        pairs = materialize_once(mine(batch_df), eager=True)
         pairs.withColumn("batch_id", F.lit(batch_id)).write.mode(
             "append"
         ).parquet(f"{out_dir}/pairs")
@@ -340,7 +344,7 @@ def build_prefix_artifacts(
     shingle_n: int | None = 3,
 ) -> PrefixIndex:
     """The EXACT join's base `PrefixIndex`, materialized via
-    localCheckpoint so the stream never recomputes it per trigger —
+    `materialize_once` so the stream never recomputes it per trigger —
     sets and df table checkpoint FIRST, the prefix table derives from
     the checkpointed pair (one base scan + one df aggregate total,
     not one per artifact — code-review r10). Production equivalent:
@@ -349,9 +353,11 @@ def build_prefix_artifacts(
         base_df, id_col, text_col,
         threshold_pct=threshold_pct, shingle_n=shingle_n,
     )
-    sets = raw.sets.localCheckpoint()
-    dft = raw.dft.localCheckpoint()
-    prefix = _prefix_table(sets, dft, raw.threshold_pct).localCheckpoint()
+    sets = materialize_once(raw.sets, eager=True)
+    dft = materialize_once(raw.dft, eager=True)
+    prefix = materialize_once(
+        _prefix_table(sets, dft, raw.threshold_pct), eager=True
+    )
     return PrefixIndex(
         dft, prefix, sets, raw.threshold_pct, raw.sep, raw.shingle_n
     )
@@ -438,7 +444,7 @@ def run_incremental_prefix_stream(
     def post_batch(fresh_df: DataFrame, batch_id: int) -> None:
         if fold_every is not None:
             st["pending"].append(
-                fresh_df.select(id_col, text_col).localCheckpoint()
+                materialize_once(fresh_df.select(id_col, text_col), eager=True)
             )
             if len(st["pending"]) >= fold_every:
                 add = st["pending"][0]
@@ -449,8 +455,8 @@ def run_incremental_prefix_stream(
                 )
                 st["index"] = PrefixIndex(
                     folded.dft,
-                    folded.prefix.localCheckpoint(),
-                    folded.sets.localCheckpoint(),
+                    materialize_once(folded.prefix, eager=True),
+                    materialize_once(folded.sets, eager=True),
                     folded.threshold_pct, folded.sep, folded.shingle_n,
                 )
                 st["pending"] = []
@@ -466,7 +472,9 @@ def run_incremental_prefix_stream(
                         "append"
                     ).parquet(f"{out_dir}/drift")
         if recent_window_batches is not None:
-            fresh_c = fresh_df.select(id_col, text_col).localCheckpoint()
+            fresh_c = materialize_once(
+                fresh_df.select(id_col, text_col), eager=True
+            )
             idx = st["index"]
             nsets = _prefix_sets(
                 fresh_c, id_col, text_col, idx.sep, idx.shingle_n
@@ -481,8 +489,8 @@ def run_incremental_prefix_stream(
             else:
                 rs = st["recent_sets"].filter(keep).unionByName(nsets)
                 rp = st["recent_prefix"].filter(keep).unionByName(npref)
-            st["recent_sets"] = rs.localCheckpoint()
-            st["recent_prefix"] = rp.localCheckpoint()
+            st["recent_sets"] = materialize_once(rs, eager=True)
+            st["recent_prefix"] = materialize_once(rp, eager=True)
 
     post = post_batch if (fold_every or recent_window_batches) else None
     return _run_ingest_dedup_stream(

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from purpleair_data_logger_spark.materialize import materialize_once
 from purpleair_data_logger_spark.operators.multimodal import (
     PHASH_BANDS,
     PHASH_PIXELS,
@@ -59,7 +60,7 @@ def build_phash_artifacts(
     max_bucket_size: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """(band index, signature table) for the base media corpus,
-    localCheckpoint-materialized so the stream never re-decodes or
+    materialized eagerly so the stream never re-decodes or
     re-hashes the base per trigger. ``max_bucket_size`` caps the index
     ONCE here (the steady-state placement of the degenerate-bucket
     ceiling — see `phash_against_index`)."""
@@ -74,7 +75,7 @@ def build_phash_artifacts(
         index = keep_buckets_within_cap(
             index, max_bucket_size, keys=("band_idx", "band_val")
         )
-    return index.localCheckpoint(), sigs.localCheckpoint()
+    return materialize_once(index, eager=True), materialize_once(sigs, eager=True)
 
 
 def run_incremental_phash_stream(
@@ -146,7 +147,10 @@ def run_incremental_phash_stream(
                 n_pixels=n_pixels, n_bands=n_bands,
             )
             st["pending"].append(
-                (pend_idx.localCheckpoint(), pend_sigs.localCheckpoint())
+                (
+                    materialize_once(pend_idx, eager=True),
+                    materialize_once(pend_sigs, eager=True),
+                )
             )
             if len(st["pending"]) >= fold_every:
                 add_idx, add_sigs = st["pending"][0]
@@ -163,12 +167,15 @@ def run_incremental_phash_stream(
                         idx2, max_base_bucket_size,
                         keys=("band_idx", "band_val"),
                     )
-                st["index"] = idx2.localCheckpoint()
-                st["sigs"] = st["sigs"].unionByName(add_sigs).localCheckpoint()
+                st["index"] = materialize_once(idx2, eager=True)
+                st["sigs"] = materialize_once(
+                    st["sigs"].unionByName(add_sigs), eager=True
+                )
                 st["pending"] = []
         if recent_window_batches is not None:
             add_idx, add_sigs = phash_index(
-                fresh_df.localCheckpoint(), thumbnailer=thumbnailer,
+                materialize_once(fresh_df, eager=True),
+                thumbnailer=thumbnailer,
                 n_pixels=n_pixels, n_bands=n_bands,
             )
             add_idx = add_idx.withColumn("_bid", F.lit(batch_id))
@@ -179,8 +186,8 @@ def run_incremental_phash_stream(
             else:
                 ri = st["recent_idx"].filter(keep).unionByName(add_idx)
                 rs = st["recent_sigs"].filter(keep).unionByName(add_sigs)
-            st["recent_idx"] = ri.localCheckpoint()
-            st["recent_sigs"] = rs.localCheckpoint()
+            st["recent_idx"] = materialize_once(ri, eager=True)
+            st["recent_sigs"] = materialize_once(rs, eager=True)
 
     post = post_batch if (fold_every or recent_window_batches) else None
     return _run_ingest_dedup_stream(

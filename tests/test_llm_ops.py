@@ -141,21 +141,28 @@ def test_cosine_lsh_fetch_modes_identical_rows(spark, sf_dir):
     see the operator docstring) must return EXACTLY the rows of the
     default vectors-ride form: same candidates by construction (same
     band signatures, same dedup keys) and the same verify arithmetic
-    on the same double-cast vectors."""
+    on the same double-cast vectors — also when some rows repeat
+    an id, where the fetch must not multiply the repeated id's pairs."""
     em = load_table(spark, sf_dir, "embeddings")
 
-    def run(ids_only: bool):
+    def run(df, ids_only: bool):
         return sorted(
             (r["vec_id_a"], r["vec_id_b"], r["cosine_sim"])
             for r in sim.cosine_neardup_lsh_verified(
-                em, "vec_id", "embedding", threshold=0.4,
+                df, "vec_id", "embedding", threshold=0.4,
                 n_planes=36, bands=12, fetch_vectors_by_id=ids_only,
             ).collect()
         )
 
-    rows_default = run(False)
+    rows_default = run(em, False)
     assert rows_default  # the wide threshold yields real pairs
-    assert run(True) == rows_default
+    assert run(em, True) == rows_default
+    # repeat six ids that have pairs, so the repeats reach the fetch
+    paired = sorted({i for a, b, _ in rows_default for i in (a, b)})
+    em_dup = em.unionByName(em.filter(F.col("vec_id").isin(paired[:6])))
+    # identical repeats add no pair: the default form returns
+    # rows_default on em_dup as well
+    assert run(em_dup, True) == rows_default
 
 
 def test_cosine_neardup_lsh_verified_recall_and_precision(spark, sf_dir):

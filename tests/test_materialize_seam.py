@@ -39,6 +39,14 @@ def test_local_default_truncates_lineage(spark):
     assert "LogicalRDD" in out._jdf.queryExecution().optimizedPlan().toString()
 
 
+def _files_under(path):
+    return sorted(
+        os.path.join(root, name)
+        for root, _dirs, files in os.walk(path)
+        for name in files
+    )
+
+
 def test_reliable_checkpoint_dir_identical_results(spark, tmp_path, monkeypatch):
     """With the env var set, the seam must (a) actually write reliable
     checkpoint files and (b) leave every routed operator's output
@@ -52,39 +60,50 @@ def test_reliable_checkpoint_dir_identical_results(spark, tmp_path, monkeypatch)
 
     ckdir = str(tmp_path / "seam_ckpt")
     monkeypatch.setenv(materialize.CHECKPOINT_DIR_ENV, ckdir)
-    monkeypatch.setattr(materialize, "_dir_set_for", None)
-    try:
-        reliable_pairs = _collect_pairs(
-            dd.neardup_lsh_verified(docs, "doc_id", "text", threshold=0.8),
-            ("doc_id_a", "doc_id_b", "jaccard"),
-        )
-        assert reliable_pairs == base_pairs
-        # the reliable path wrote checkpoint files under the directory
-        found = [
-            name
-            for root, _dirs, files in os.walk(ckdir)
-            for name in files
-        ]
-        assert found, "reliable checkpoint produced no files"
-    finally:
-        # restore the session's local-default posture for later tests
-        monkeypatch.delenv(materialize.CHECKPOINT_DIR_ENV, raising=False)
-        materialize._dir_set_for = None
+    # held until the files are listed: the session's cleaner deletes a
+    # checkpoint's files once its frame is garbage-collected
+    out = dd.neardup_lsh_verified(docs, "doc_id", "text", threshold=0.8)
+    assert _collect_pairs(out, ("doc_id_a", "doc_id_b", "jaccard")) == base_pairs
+    assert _files_under(ckdir), "reliable checkpoint produced no files"
+
+
+def test_reliable_checkpoint_dir_survives_repointed_context(
+    spark, tmp_path, monkeypatch
+):
+    """The configured dir wins over whatever the context was last
+    pointed at: after a foreign ``setCheckpointDir(B)`` (or a context
+    restart, which forgets the dir), the next checkpoint still lands
+    under the configured A and writes nothing under B."""
+    dir_a, dir_b = str(tmp_path / "a"), str(tmp_path / "b")
+    monkeypatch.setenv(materialize.CHECKPOINT_DIR_ENV, dir_a)
+    first = materialize.materialize_once(_docs(spark))
+    first.collect()
+    before = _files_under(dir_a)
+    assert before
+    spark.sparkContext.setCheckpointDir(dir_b)
+    second = materialize.materialize_once(_docs(spark))
+    assert sorted(second.collect()) == sorted(first.collect())
+    assert len(_files_under(dir_a)) > len(before)
+    assert not _files_under(dir_b)
 
 
 def test_seam_covers_every_query_path_site():
-    """No bare localCheckpoint on batch query paths: operators must go
-    through the seam so SPARK_GRAFT_CHECKPOINT_DIR governs them all.
-    (Streaming fold paths keep their own eager localCheckpoints — state
-    carried across micro-batches is a different lifecycle.)"""
+    """No lineage truncation outside the seam: every module of the
+    package must go through `materialize.materialize_once`, so
+    SPARK_GRAFT_CHECKPOINT_DIR governs every site, batch and stream."""
     import pathlib
 
-    ops_dir = pathlib.Path(dd.__file__).parent
+    pkg_dir = pathlib.Path(materialize.__file__).parent
     offenders = []
-    for p in ops_dir.glob("*.py"):
+    for p in sorted(pkg_dir.rglob("*.py")):
+        if p.name == "materialize.py" and p.parent == pkg_dir:
+            continue
         for i, line in enumerate(p.read_text().splitlines(), 1):
-            if ".localCheckpoint(" in line and "materialize" not in line:
-                offenders.append(f"{p.name}:{i}")
+            if any(
+                call in line
+                for call in (".localCheckpoint(", ".checkpoint(", "setCheckpointDir(")
+            ):
+                offenders.append(f"{p.relative_to(pkg_dir)}:{i}")
     assert not offenders, offenders
 
 

@@ -79,6 +79,22 @@ def test_source_fetch_multi_with_stub_transport(spark):
         assert isinstance(row[col], float) and row[col] == want, col
 
 
+def test_datasource_fetch_forwards_read_keys(monkeypatch):
+    """`format("purpleair")` / `start_ingest` live mode must send the
+    configured read keys, or private sensors are silently dropped."""
+    from purpleair_data_logger_spark.sources import spark_datasource as sds
+
+    sent = []
+    monkeypatch.setattr(api, "execute", lambda req: sent.append(req.url) or {})
+    sds._fetch(
+        {"api_key": "k", "fields": "name", "read_keys": "abc,def", "max_age": "60"}
+    )
+    assert sent == [
+        "https://api.purpleair.com/v1/sensors/"
+        "?fields=name&read_keys=abc%2Cdef&max_age=60"
+    ]
+
+
 def test_config_xor(tmp_path):
     single = tmp_path / "single.json"
     single.write_text(json.dumps({"sensor_index": 1, "read_key": None, "fields": None}))

@@ -2638,11 +2638,19 @@ def test_streaming_prefix_fold_every_keeps_index_current(spark, tmp_path):
     assert fresh == {101}
 
 
-def test_streaming_lsh_fold_every_keeps_index_current(spark, tmp_path):
+def test_streaming_lsh_fold_every_keeps_index_current(
+    spark, tmp_path, monkeypatch
+):
     """The LSH form's fold hook (`dedup.lsh_index_append`): same
     cross-batch family as the prefix test; banding at J=0.8065 with 16
     bands of 4 collides with p~0.9997 and the hash is deterministic,
-    so the expected pairs are stable."""
+    so the expected pairs are stable. The fold state carried across the
+    three triggers goes through `materialize_once`, so with
+    ``SPARK_GRAFT_CHECKPOINT_DIR`` set the same stream stores it as
+    reliable checkpoint files and emits the same output."""
+    import os
+
+    from purpleair_data_logger_spark import materialize
     from purpleair_data_logger_spark.streaming.neardup import (
         run_incremental_neardup_stream,
     )
@@ -2651,19 +2659,33 @@ def test_streaming_lsh_fold_every_keeps_index_current(spark, tmp_path):
     src = str(tmp_path / "lf_src")
     _write_one_doc_batches(spark, src, fam)
 
-    out = str(tmp_path / "lf_out")
-    q = run_incremental_neardup_stream(
-        spark, src, base, out, str(tmp_path / "lf_ckpt"),
-        threshold=0.8, fold_every=1, max_files_per_trigger=1,
-    )
-    q.awaitTermination(240)
-    pairs = {
-        (r["new_doc_id"], r["base_doc_id"])
-        for r in spark.read.parquet(f"{out}/pairs").collect()
-    }
+    def run(tag):
+        out = str(tmp_path / f"{tag}_out")
+        q = run_incremental_neardup_stream(
+            spark, src, base, out, str(tmp_path / f"{tag}_ckpt"),
+            threshold=0.8, fold_every=1, max_files_per_trigger=1,
+        )
+        q.awaitTermination(240)
+        pairs = {
+            (r["new_doc_id"], r["base_doc_id"])
+            for r in spark.read.parquet(f"{out}/pairs").collect()
+        }
+        fresh = {
+            r["doc_id"] for r in spark.read.parquet(f"{out}/fresh").collect()
+        }
+        return q, pairs, fresh
+
+    _q, pairs, fresh = run("lf")
     assert pairs == {(102, 101), (103, 101)}
-    fresh = {r["doc_id"] for r in spark.read.parquet(f"{out}/fresh").collect()}
     assert fresh == {101}
+
+    state_dir = str(tmp_path / "lf_state")
+    monkeypatch.setenv(materialize.CHECKPOINT_DIR_ENV, state_dir)
+    # the query handle keeps the final fold state (and so its files,
+    # which the cleaner deletes once unreferenced) alive
+    q, pairs_r, fresh_r = run("lr")
+    assert (pairs_r, fresh_r) == (pairs, fresh)
+    assert any(files for _root, _dirs, files in os.walk(state_dir))
 
 
 def test_streaming_prefix_drift_check_surfaces_rebuild_signal(spark, tmp_path):
