@@ -10,9 +10,12 @@ PurpleAirPSQLQueryStatements.py:564-571).
 Here the whole read path is Spark SQL over the parquet store: views
 registered per table so both DataFrame and ``spark.sql`` entry points
 work, panel queries as functions, the template-variable directory
-query included. Partition pruning on the date partition plus
-sensor_index row-group stats make the single-sensor panel pattern
-cheap at any scale.
+query included. The time-range panels read through
+`SensorTableStore.read_range`, whose ``reading_date`` bounds become
+partition filters (TimescaleDB's chunk exclusion), and sensor_index
+row-group stats prune within a date, so the single-sensor panel
+pattern stays cheap at any scale. Every table read is bound to the
+schema registry, so building a query runs no Spark job.
 """
 
 from __future__ import annotations
@@ -75,10 +78,8 @@ def panel(
     """One timeseries panel: $__timeGroup bucketed max() per column,
     filtered to the selected sensor + time range, ordered by bucket."""
     table, cols = PANELS[panel_name]
-    df = store.read(table).filter(
-        (F.col("sensor_index") == sensor_index)
-        & (F.col("data_time_stamp") >= F.timestamp_seconds(F.lit(start_epoch)))
-        & (F.col("data_time_stamp") < F.timestamp_seconds(F.lit(end_epoch)))
+    df = store.read_range(table, start_epoch=start_epoch, end_epoch=end_epoch).filter(
+        F.col("sensor_index") == sensor_index
     )
     out = agg.bucketed_agg(
         df,
@@ -108,15 +109,8 @@ def thingspeak_text_panel(
         "secondary_id_b",
         "secondary_key_b",
     ]
-    df = store.read(S.THINGSPEAK)
-    return (
-        df.filter(
-            (F.col("data_time_stamp") >= F.timestamp_seconds(F.lit(start_epoch)))
-            & (F.col("data_time_stamp") < F.timestamp_seconds(F.lit(end_epoch)))
-        )
-        .select(*cols)
-        .orderBy("data_time_stamp")
-    )
+    df = store.read_range(S.THINGSPEAK, start_epoch=start_epoch, end_epoch=end_epoch)
+    return df.select(*cols).orderBy("data_time_stamp")
 
 
 def station_text_panel(
@@ -132,12 +126,5 @@ def station_text_panel(
         "firmware_version",
         "firmware_upgrade",
     ]
-    df = store.read(S.STATION)
-    return (
-        df.filter(
-            (F.col("data_time_stamp") >= F.timestamp_seconds(F.lit(start_epoch)))
-            & (F.col("data_time_stamp") < F.timestamp_seconds(F.lit(end_epoch)))
-        )
-        .select(*text_cols)
-        .orderBy("data_time_stamp")
-    )
+    df = store.read_range(S.STATION, start_epoch=start_epoch, end_epoch=end_epoch)
+    return df.select(*text_cols).orderBy("data_time_stamp")

@@ -2,7 +2,7 @@
 ``checkpoint`` in the package goes through `materialize_once`, and it
 is the only code that sets a checkpoint directory.
 
-Its callers are of three kinds:
+Its callers are of four kinds:
 
 * within-query reuse points — an intermediate consumed by MORE THAN
   ONE downstream subtree of the same query (the LSH band index, both
@@ -18,7 +18,14 @@ Its callers are of three kinds:
   `streaming/phash.py`, `streaming/curation.py`: base artifacts, folded
   indexes, recent windows, the per-batch frame that feeds several
   sinks). These pass ``eager=True``: the state must be stored before
-  the trigger commits, not at some later trigger's first use.
+  the trigger commits, not at some later trigger's first use;
+* a commit that must read its source once
+  (`SensorTableStore.append_wide`): the deduplicated batch and its
+  nine-table layout are stored before the nine concurrent table
+  stagings start. It passes ``eager=True`` because concurrent first
+  uses of a lazy handle can each re-run the source, and a live
+  ``format("purpleair")`` source re-run is another HTTPS request whose
+  response can differ.
 
 One setting decides the posture for all of them:
 
@@ -35,7 +42,7 @@ One setting decides the posture for all of them:
   configured path, so a restarted context or a foreign
   ``setCheckpointDir`` cannot divert the files.
 
-Non-streaming callers stay lazy: the stored plan is truncated at first
+The other callers stay lazy: the stored plan is truncated at first
 use, so plan-census tooling that only compiles still runs no jobs, and
 the materialization happens inside the first consuming job rather than
 as an extra eager job.
@@ -93,7 +100,8 @@ def materialize_once(
     the producing pipeline.
 
     ``eager=True`` stores the rows now (one job) instead of at first
-    use — only stream state carried across triggers needs that.
+    use — for stream state carried across triggers, and for a commit
+    whose concurrent writers must not each re-run its source.
 
     ``serialized=True`` stores compact serialized blocks
     (StorageLevel.MEMORY_AND_DISK — PySpark's name for the serialized

@@ -16,6 +16,9 @@ CSV; SURVEY.md §2.8) with partitioned, clustered parquet tables:
   upsert, compaction) is one all-or-none `sinks.atomic` snapshot
   publish (`SensorTableStore._publish`) under the store's single-writer
   lease; appends reach its partition swap via `atomic.keep_live_files`;
+* nine INSERTs per reading → an append reads its source once, lays the
+  batch out once and stores that layout (`materialize_once`), and
+  stages the nine tables as column projections of it;
 * retention policy → `apply_retention` partition-drop job;
 * DROP ALL (``PurpleAirPSQLQueryStatements.py:543-553``) → `drop_all`.
 
@@ -25,9 +28,11 @@ A compaction tick that overlaps an ingest fails with
 `atomic.SnapshotLeaseHeld` instead of racing it.
 
 At 100 TB: the date partition bounds every maintenance job, writes
-shuffle once on sensor_index (well distributed — millions of sensors),
-and readers get pruning on both the partition column and the
-sensor_index sort within row groups (min/max page stats).
+shuffle once per batch on the date, and time-range readers
+(`read_range`) get pruning on both the partition column and the
+sensor_index sort within row groups (min/max page stats). Every read
+is bound to the schema registry (`_scan`), so building one runs no
+schema-inference job.
 """
 
 from __future__ import annotations
@@ -40,8 +45,10 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from purpleair_data_logger_spark import schema as S
+from purpleair_data_logger_spark.materialize import materialize_once
 from purpleair_data_logger_spark.operators.transforms import vertical_split
 from purpleair_data_logger_spark.sinks import atomic
 
@@ -123,18 +130,28 @@ class SensorTableStore:
         stays O(batch), not O(table), at any scale. Raises
         `atomic.SnapshotLeaseHeld` while another writer holds the lease;
         a reader that does not heal can miss a partition mid-swap.
+
+        ``wide`` is read exactly once: the batch is stored (eagerly, so
+        the nine concurrent stagings cannot each re-run a live source
+        request), probed, laid out by `_prepare` once, and each table
+        stages a column projection of that one stored layout.
         """
 
         def build() -> dict[str, DataFrame]:
             batch = wide.dropDuplicates(S.KEY_COLUMNS)
             if dedup_against_existing and os.path.isdir(self.path(S.STATION)):
+                batch = materialize_once(batch, serialized=True, eager=True)
                 existing = (
-                    self.spark.read.parquet(self.path(S.STATION))
+                    self._scan(S.STATION)
                     .filter(F.col(PARTITION_COL).isin(self._batch_dates(batch)))
                     .select(*S.KEY_COLUMNS)
                 )
                 batch = batch.join(existing, on=S.KEY_COLUMNS, how="left_anti")
-            return {t: self._prepare(p) for t, p in vertical_split(batch).items()}
+            laid = materialize_once(self._prepare(batch), serialized=True, eager=True)
+            return {
+                t: laid.select(*S.table_schema(t).fieldNames(), PARTITION_COL)
+                for t in S.TABLE_NAMES
+            }
 
         self._publish(build, keep_live=True)
 
@@ -161,7 +178,7 @@ class SensorTableStore:
                 out = part
                 if os.path.isdir(self.path(table)):
                     survivors = (
-                        self.spark.read.parquet(self.path(table))
+                        self._scan(table)
                         .filter(F.col(PARTITION_COL).isin(batch_dates))
                         .drop(PARTITION_COL)
                         .join(
@@ -231,16 +248,17 @@ class SensorTableStore:
         beater.start()
         try:
             frames = build()
-            # Nine narrow pipelines, NOT one cached wide one: Catalyst
-            # prunes each table's pipeline down to its own ~15 columns
-            # end-to-end (scan → transform → shuffle → sort → write all
-            # narrow), so the nine "recomputations" collectively do about
-            # one wide frame of work. Caching the clustered wide frame
-            # instead materializes all 117 columns and defeats pruning —
-            # measured 3x slower at sf0.1. The stagings are submitted
-            # from driver threads so they share the executor pool
-            # concurrently (narrow jobs rarely saturate it); their
-            # targets are disjoint directories, so ordering is irrelevant.
+            # The stagings are submitted from driver threads so they
+            # share the executor pool concurrently (narrow jobs rarely
+            # saturate it); their targets are disjoint directories, so
+            # ordering is irrelevant. An append's frames project one
+            # stored layout instead of running nine pipelines that each
+            # re-read the source and re-shuffle: a 950-row poll went
+            # from 39 jobs and 6.2-8.0 s to 16 jobs and 3.6-4.2 s, and
+            # bench.py's sf0.1 events ingest (100k rows) stayed at a
+            # median 8.65 s (7.0-10.8 s before, 7.5-9.6 s after), so
+            # the once-measured "3x slower" for one cached wide frame
+            # does not hold (4-vCPU VM).
             with ThreadPoolExecutor(max_workers=len(frames)) as pool:
                 list(pool.map(_stage, frames.items()))
         except BaseException:
@@ -263,8 +281,30 @@ class SensorTableStore:
 
     # -- read path ---------------------------------------------------------
 
+    def _scan(self, table: str) -> DataFrame:
+        """The store's one table reader, with ``reading_date``. Bound to
+        the registry's schema plus the DATE partition column, so no read
+        starts a Spark job to infer the schema from a parquet footer."""
+        schema = S.table_schema(table).add(PARTITION_COL, T.DateType())
+        return self.spark.read.schema(schema).parquet(self.path(table))
+
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table)).drop(PARTITION_COL)
+        return self._scan(table).drop(PARTITION_COL)
+
+    def read_range(self, table: str, *, start_epoch: int, end_epoch: int) -> DataFrame:
+        """``table``'s rows with ``start_epoch <= data_time_stamp <
+        end_epoch``. The range's ``reading_date`` bounds (`_prepare`'s
+        `to_date`, in the session time zone) become partition filters,
+        so the scan lists and reads only the dates in range."""
+        start = F.timestamp_seconds(F.lit(start_epoch))
+        end = F.timestamp_seconds(F.lit(end_epoch))
+        ts, day = F.col("data_time_stamp"), F.col(PARTITION_COL)
+        return (
+            self._scan(table)
+            .filter((day >= F.to_date(start)) & (day <= F.to_date(end)))
+            .filter((ts >= start) & (ts < end))
+            .drop(PARTITION_COL)
+        )
 
     def reconstruct_reading(self, tables: list[str] | None = None) -> DataFrame:
         """J1: the N-way PK equi-join rebuilding the logical wide row.
@@ -322,9 +362,9 @@ class SensorTableStore:
         """Rewrite ``table``'s ``dates`` partitions (all when None)."""
 
         def build() -> dict[str, DataFrame]:
-            df = self.spark.read.parquet(self.path(table))
+            df = self._scan(table)
             if dates is not None:
-                df = df.filter(F.col(PARTITION_COL).cast("date").isin(dates))
+                df = df.filter(F.col(PARTITION_COL).isin(dates))
             return {
                 table: df.repartition(
                     target_partitions, "sensor_index"

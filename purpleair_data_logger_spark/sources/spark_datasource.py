@@ -110,8 +110,12 @@ def payload_to_rows(payload: dict) -> list[tuple]:
 
 def payload_frame(spark: SparkSession, payload: dict) -> DataFrame:
     """Payload → wire-form frame built in the calling process: the same
-    rows and schema ``format("purpleair")`` emits for it."""
-    return spark.createDataFrame(payload_to_rows(payload), _wire_schema())
+    rows and schema ``format("purpleair")`` emits for it, in one
+    partition like the DataSource's (a list handed to `createDataFrame`
+    is spread over defaultParallelism partitions, one Python task each
+    on every read)."""
+    rows = spark.sparkContext.parallelize(payload_to_rows(payload), 1)
+    return spark.createDataFrame(rows, _wire_schema())
 
 
 def _fetch(options: dict) -> dict:
@@ -169,9 +173,8 @@ class PurpleAirStreamReader(SimpleDataSourceStreamReader):
     """Poll-per-microbatch: offset = number of polls performed.
 
     The trigger interval (e.g. ``processingTime='65 seconds'``) is the
-    rate limit; Spark's checkpoint persists the offset so restarts
-    don't re-request old batches (the replayed batch is re-read from
-    the commit log, not the API).
+    rate limit; Spark's checkpoint persists the offset, so a restart
+    re-requests only the one batch whose commit-log entry is missing.
     """
 
     def __init__(self, options: dict):
@@ -183,6 +186,13 @@ class PurpleAirStreamReader(SimpleDataSourceStreamReader):
     def read(self, start: dict):
         rows = payload_to_rows(_fetch(self.options))
         return iter(rows), {"poll": start["poll"] + 1}
+
+    def readBetweenOffsets(self, start: dict, end: dict):
+        """Replay of a batch that a restart found uncommitted: poll
+        again. A fixture returns the batch's rows; a live API returns
+        its current readings, and `start_ingest`'s key probe stores
+        each reading once either way."""
+        return iter(payload_to_rows(_fetch(self.options)))
 
 
 class PurpleAirDataSource(DataSource):

@@ -64,7 +64,7 @@ class PollLoop:
         self._commit(self.source.fetch_multi(fields, **filters))
 
     def _commit(self, df) -> None:
-        # the same commit as start_ingest's foreachBatch sink
+        # start_ingest's commit; a poll loop replays nothing, so no key probe
         self.store.append_wide(cast_epoch_to_timestamp(df))
 
     def run(

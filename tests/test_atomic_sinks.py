@@ -9,6 +9,7 @@ from __future__ import annotations
 import os
 import shutil
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -290,25 +291,25 @@ def _keys(store):
 
 
 def test_failed_append_loses_no_reading_on_redelivery(spark, tmp_path, monkeypatch):
-    """One non-STATION table's staging write fails mid-append: the
-    append rolls back in all nine tables, so the re-delivery's STATION
-    key probe (dedup_against_existing) finds nothing and the reading
-    lands everywhere — not in eight tables, with the ninth one row
-    short and the reading lost from J1 for good."""
+    """One non-STATION table's staging fails mid-append: the append
+    rolls back in all nine tables, so the re-delivery's STATION key
+    probe (dedup_against_existing) finds nothing and the reading lands
+    everywhere — not in eight tables, with the ninth one row short and
+    the reading lost from J1 for good."""
     store = _seeded_store(spark, tmp_path)
     before = _keys(store)
     files = _store_files(store.base_path)
     batch = _wide(spark, BASE_TS + 120, [[1, "s1", 42, 1.7, 0]])
-    victim = set(X.vertical_split(batch)[S.PM1_0].columns)
-    prepare = store._prepare
+    victim = store.path(S.PM1_0)
+    keep_live = atomic.keep_live_files
 
-    def failing_prepare(df):
-        if set(df.columns) == victim:
+    def failing_keep_live(live):
+        if live == victim:
             raise RuntimeError("injected pm1_0 staging failure")
-        return prepare(df)
+        return keep_live(live)
 
     with monkeypatch.context() as mp:
-        mp.setattr(store, "_prepare", failing_prepare)
+        mp.setattr(atomic, "keep_live_files", failing_keep_live)
         with pytest.raises(RuntimeError, match="injected"):
             store.append_wide(batch, dedup_against_existing=True)
     # rolled back in all nine tables: not one file added or lost
@@ -321,6 +322,41 @@ def test_failed_append_loses_no_reading_on_redelivery(spark, tmp_path, monkeypat
     for t in S.TABLE_NAMES:
         assert after[t] == sorted(before[t] + [new_key]), t
     assert reopened.reconstruct_reading().count() == 4
+
+
+def test_append_spanning_two_dates_adds_one_sorted_file_per_date(spark, tmp_path):
+    """The single stored layout keeps the store's file layout: an append
+    touching two dates adds exactly one file per date to every table,
+    its rows in (sensor_index, data_time_stamp) order."""
+    store = _seeded_store(spark, tmp_path)
+    files = set(_store_files(store.base_path))
+    day2 = BASE_TS + 86400
+    batch = (
+        _wide(spark, BASE_TS + 600, [[3, "s3", 43, 1.8, 0], [1, "s1", 42, 1.7, 0]])
+        .unionByName(_wide(spark, day2 + 900, [[2, "s2", 51, 2.6, 0], [1, "s1", 44, 1.9, 0]]))
+        .unionByName(_wide(spark, BASE_TS + 300, [[3, "s3", 45, 2.0, 0], [2, "s2", 46, 2.1, 0]]))
+        .unionByName(_wide(spark, day2 + 300, [[2, "s2", 52, 2.7, 0]]))
+    )
+    store.append_wide(batch, dedup_against_existing=True)
+    added = sorted(
+        p for p in set(_store_files(store.base_path)) - files if p.endswith(".parquet")
+    )
+    for t in S.TABLE_NAMES:
+        mine = [p for p in added if p.split(os.sep)[0] == t]
+        assert sorted(p.split(os.sep)[1] for p in mine) == [
+            f"{PARTITION_COL}=2022-08-05",
+            f"{PARTITION_COL}=2022-08-06",
+        ], t
+        for p in mine:
+            tbl = pq.read_table(os.path.join(store.base_path, p), columns=S.KEY_COLUMNS)
+            keys = list(
+                zip(
+                    tbl.column("sensor_index").to_pylist(),
+                    tbl.column("data_time_stamp").to_pylist(),
+                )
+            )
+            assert keys == sorted(keys), (t, p)
+    assert store.read(S.STATION).count() == 3 + 7
 
 
 def test_append_refused_while_another_writer_holds_the_lease(spark, tmp_path):

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from purpleair_data_logger_spark import dashboard as dash
@@ -7,6 +9,7 @@ from purpleair_data_logger_spark import schema as S
 from purpleair_data_logger_spark.io import load_table
 from purpleair_data_logger_spark.operators import skew
 from purpleair_data_logger_spark.operators import transforms as X
+from purpleair_data_logger_spark.plans import explain as E
 from purpleair_data_logger_spark.sinks.tables import SensorTableStore
 from purpleair_data_logger_spark.sources.spark_datasource import payload_frame
 
@@ -63,6 +66,44 @@ def test_directory_and_panels(spark, tmp_path):
     ).collect()
     assert len(ts) == 48
     assert "primary_id_a" in ts[0].asDict()
+
+
+def _jobs_started(spark) -> set[int]:
+    """Ids of the jobs the status tracker knows, once the listener bus
+    has delivered every event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def test_building_store_queries_runs_no_spark_job(spark, tmp_path):
+    """Store reads are bound to the registry's schema, so building a
+    table read, the J1 reconstruction or a panel infers no parquet
+    schema: no Spark job runs until the query does."""
+    store = _seeded_store(spark, tmp_path)
+    before = _jobs_started(spark)
+    store.read(S.ENVIRONMENTAL)
+    store.reconstruct_reading().filter(F.col("sensor_index") == 1)
+    dash.panel(
+        store, "pm2_5", sensor_index=1, start_epoch=BASE, end_epoch=BASE + 7200
+    )
+    dash.directory(store)
+    assert _jobs_started(spark) == before
+
+
+def test_time_range_panels_prune_date_partitions(spark, tmp_path):
+    """Each time-range panel's scan carries reading_date partition
+    filters derived from its epoch range (chunk exclusion)."""
+    store = _seeded_store(spark, tmp_path)
+    rng = {"start_epoch": BASE, "end_epoch": BASE + 7200}
+    for df in (
+        dash.panel(store, "environmental", sensor_index=1, **rng),
+        dash.thingspeak_text_panel(store, **rng),
+        dash.station_text_panel(store, **rng),
+    ):
+        plan = E.formatted_plan(df)
+        filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+        assert filters and all("reading_date" in f for f in filters), plan
+        assert len(df.collect()) > 0
 
 
 def test_register_views_sql_entry(spark, tmp_path):

@@ -79,6 +79,23 @@ def test_source_fetch_multi_with_stub_transport(spark):
         assert isinstance(row[col], float) and row[col] == want, col
 
 
+def test_payload_frame_is_one_partition(spark):
+    """`payload_frame` builds the DataSource's one partition, not one
+    Python task per default-parallelism slice."""
+    from purpleair_data_logger_spark import schema as S
+    from purpleair_data_logger_spark.sources import spark_datasource as sds
+
+    payload = {
+        "data_time_stamp": 1659710232,
+        "fields": ["sensor_index", "name", "pm2.5_atm"],
+        "data": [[1, "s1", 1.5], [2, "s2", 2.5], [3, "s3", 3.5]],
+    }
+    df = sds.payload_frame(spark, payload)
+    assert df.rdd.getNumPartitions() == 1
+    assert df.schema == S.wide_schema(at_rest=False)
+    assert [tuple(r) for r in df.collect()] == sds.payload_to_rows(payload)
+
+
 def test_datasource_fetch_forwards_read_keys(monkeypatch):
     """`format("purpleair")` / `start_ingest` live mode must send the
     configured read keys, or private sensors are silently dropped."""

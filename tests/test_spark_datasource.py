@@ -179,3 +179,95 @@ def test_ingest_routes_store_identical_rows(spark, tmp_path):
         assert len(got["batch"]) == 3, table
         assert got["stream"] == got["batch"], table
         assert got["poll"] == got["batch"], table
+
+
+def test_append_reads_its_source_once(spark, tmp_path):
+    """A deduplicating append into an existing store runs its source's
+    read exactly once: in live mode every further read would be another
+    HTTPS request, whose response can differ table to table."""
+    from purpleair_data_logger_spark.sinks.tables import SensorTableStore
+
+    log = tmp_path / "reads.log"
+
+    class CountingReader(ds.PurpleAirBatchReader):
+        def read(self, partition):
+            with open(self.options["read_log"], "a") as fh:
+                fh.write("read\n")
+            yield from super().read(partition)
+
+    class CountingDataSource(ds.PurpleAirDataSource):
+        @classmethod
+        def name(cls) -> str:
+            return "purpleair_read_counting"
+
+        def reader(self, schema):
+            return CountingReader(dict(self.options))
+
+    spark.dataSource.register(CountingDataSource)
+
+    def load(ts):
+        p = tmp_path / f"m{ts}.json"
+        p.write_text(
+            json.dumps(
+                {
+                    "data_time_stamp": ts,
+                    "fields": ["sensor_index", "name", "pm2.5_atm"],
+                    "data": [[1, "s1", 1.5], [2, "s2", 2.5]],
+                }
+            )
+        )
+        return (
+            spark.read.format("purpleair_read_counting")
+            .option("fixture_path", str(p))
+            .option("read_log", str(log))
+            .load()
+        )
+
+    store = SensorTableStore(spark, str(tmp_path / "tables"), cluster_partitions=2)
+    store.append_wide(cast_epoch_to_timestamp(load(1659710232)))
+    log.write_text("")
+    store.append_wide(
+        cast_epoch_to_timestamp(load(1659710352)), dedup_against_existing=True
+    )
+    assert log.read_text().splitlines() == ["read"]
+    for t in S.TABLE_NAMES:
+        assert store.read(t).count() == 4, t
+
+
+def test_streaming_replay_of_uncommitted_batch_lands_each_key_once(spark, tmp_path):
+    """A restart replays the batch whose commit-log entry is missing
+    (the sink ran, the commit did not): every key still appears once in
+    all nine tables."""
+    from purpleair_data_logger_spark.sinks.tables import SensorTableStore
+    from purpleair_data_logger_spark.streaming.ingest import start_ingest
+
+    payload = {
+        "data_time_stamp": 1659710232,
+        "fields": ["sensor_index", "name", "pm2.5_atm"],
+        "data": [[1, "s1", 1.5], [2, "s2", 2.5]],
+    }
+    p = tmp_path / "m.json"
+    p.write_text(json.dumps(payload))
+    store = SensorTableStore(spark, str(tmp_path / "tables"), cluster_partitions=2)
+    ckpt = tmp_path / "ckpt"
+
+    def drain():
+        start_ingest(
+            spark,
+            store,
+            checkpoint_path=str(ckpt),
+            source_options={"fixture_path": str(p)},
+            available_now=True,
+        ).awaitTermination(180)
+
+    drain()
+    commits = ckpt / "commits"
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if (commits / name).exists():
+            (commits / name).unlink()
+    drain()
+    assert (commits / str(last)).exists()
+    for t in S.TABLE_NAMES:
+        keys = [tuple(r) for r in store.read(t).select(*S.KEY_COLUMNS).collect()]
+        assert len(keys) == len(set(keys)) == 2, t
