@@ -249,12 +249,10 @@ def main() -> None:
     # scan), then best-of-3 with the tempdir created BEFORE the clock
     # starts and removed after it stops, and every attempt recorded in
     # BENCH_DETAIL's "runs" so residual variance is auditable.
-    cluster_parts = int(os.environ.get("SPARK_GRAFT_CPUS", 8))
-
     def _ingest_once(tmp: str) -> float:
         t0 = time.perf_counter()
         wide = X.to_storage_form(as_readings)
-        store = SensorTableStore(spark, tmp, cluster_partitions=cluster_parts)
+        store = SensorTableStore(spark, tmp)
         store.append_wide(wide)
         return time.perf_counter() - t0
 

@@ -11,7 +11,8 @@ Here the whole read path is Spark SQL over the parquet store: views
 registered per table so both DataFrame and ``spark.sql`` entry points
 work, panel queries as functions, the template-variable directory
 query included. The time-range panels read through
-`SensorTableStore.read_range`, whose ``reading_date`` bounds become
+`SensorTableStore.read_range`, whose ``reading_date`` bounds (UTC days
+in any session time zone, the store's one date rule) become literal
 partition filters (TimescaleDB's chunk exclusion), and sensor_index
 row-group stats prune within a date, so the single-sensor panel
 pattern stays cheap at any scale. Every table read is bound to the

@@ -14,6 +14,7 @@ from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -30,16 +31,20 @@ TABLES = (
 
 
 @lru_cache(maxsize=256)
-def _nanos_ts_columns(path: str) -> tuple[str, ...]:
-    """Columns stored as TIMESTAMP(NANOS) per the parquet footer."""
+def _footer(path: str) -> tuple[T.StructType, tuple[str, ...]]:
+    """The Spark schema a read of ``path`` binds to, from its parquet
+    footer (read once, on the driver), and the columns stored as
+    TIMESTAMP(NANOS), which the schema types as raw nano longs. Binding
+    the read spares Spark the schema-inference job of an unbound
+    ``spark.read.parquet``; the types are the ones inference gives."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    schema = pq.read_schema(path)
-    return tuple(
-        f.name
-        for f in schema
-        if str(f.type).startswith("timestamp[ns")
-    )
+    arrow = pq.read_schema(path)
+    nanos = tuple(f.name for f in arrow if str(f.type).startswith("timestamp[ns"))
+    arrow = pa.schema([f.with_type(pa.int64()) if f.name in nanos else f for f in arrow])
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=True), nanos
 
 
 def normalize_timestamps(df: DataFrame) -> DataFrame:
@@ -64,11 +69,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    nanos_cols = _nanos_ts_columns(path)
-    if not nanos_cols:
-        return normalize_timestamps(spark.read.parquet(path))
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    schema, nanos_cols = _footer(path)
+    if nanos_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.schema(schema).parquet(path)
     for c in nanos_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return normalize_timestamps(df)

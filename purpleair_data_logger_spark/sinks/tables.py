@@ -4,20 +4,23 @@ Replaces the reference's sink zoo (TimescaleDB hypertables + SQLite +
 CSV; SURVEY.md §2.8) with partitioned, clustered parquet tables:
 
 * hypertable time-chunking  → ``partitionBy(reading_date)`` + Catalyst
-  partition pruning (reference ``PurpleAirPSQLDataLogger.py:105-112``);
+  partition pruning (reference ``PurpleAirPSQLDataLogger.py:105-112``).
+  A row's ``reading_date`` is the UTC day of its ``data_time_stamp`` in
+  any session time zone (`_dated`); it is set once, when the row first
+  enters the store, and read back, never recomputed;
 * columnar compression with ``segmentby sensor_index / orderby
-  data_time_stamp`` (``:129-136``) → ZSTD parquet written
-  ``repartition(sensor_index).sortWithinPartitions(data_time_stamp)``,
-  so each file covers few sensors in time order — the same locality the
-  TimescaleDB policy buys, but at write time;
+  data_time_stamp`` (``:129-136``) → ZSTD parquet in one layout
+  (`_prepare`): one file per date, rows in (sensor_index,
+  data_time_stamp) order — the same locality the TimescaleDB policy
+  buys, but at write time. Appends, upserts and compaction all write it;
 * PK-duplicate crash (plain INSERT, ``:153-347``) → idempotent
   dedup-on-write (documented deviation, SURVEY.md §7.4);
 * one transaction per reading (``:347``) → every store write (append,
   upsert, compaction) is one all-or-none `sinks.atomic` snapshot
   publish (`SensorTableStore._publish`) under the store's single-writer
   lease; appends reach its partition swap via `atomic.keep_live_files`;
-* nine INSERTs per reading → an append reads its source once, lays the
-  batch out once and stores that layout (`materialize_once`), and
+* nine INSERTs per reading → an append or upsert reads its source
+  once: it stores the deduplicated batch (`materialize_once`) and
   stages the nine tables as column projections of it;
 * retention policy → `apply_retention` partition-drop job;
 * DROP ALL (``PurpleAirPSQLQueryStatements.py:543-553``) → `drop_all`.
@@ -49,21 +52,36 @@ from pyspark.sql import types as T
 
 from purpleair_data_logger_spark import schema as S
 from purpleair_data_logger_spark.materialize import materialize_once
-from purpleair_data_logger_spark.operators.transforms import vertical_split
 from purpleair_data_logger_spark.sinks import atomic
 
 PARTITION_COL = "reading_date"
+_DAY_SECONDS = 86400
+_EPOCH_DATE = _dt.date(1970, 1, 1)
+
+
+def _dated(df: DataFrame) -> DataFrame:
+    """``df`` with its partition date. Rows read from the store keep
+    their stored ``reading_date``; new rows get the UTC day of
+    ``data_time_stamp``, whatever the session time zone (a session-zone
+    date would file one instant under different dates in different
+    sessions, and then pruning and upserts miss it)."""
+    if PARTITION_COL in df.columns:
+        return df
+    day = F.floor(F.unix_seconds(F.col("data_time_stamp")) / _DAY_SECONDS)
+    return df.withColumn(PARTITION_COL, F.date_from_unix_date(day.cast("int")))
+
+
+def _epoch_date(epoch: int) -> _dt.date:
+    """`_dated`'s rule for an epoch-seconds literal."""
+    return _EPOCH_DATE + _dt.timedelta(days=epoch // _DAY_SECONDS)
 
 
 class SensorTableStore:
     """Nine partitioned parquet tables rooted at ``base_path``."""
 
-    def __init__(
-        self, spark: SparkSession, base_path: str, *, cluster_partitions: int | None = None
-    ):
+    def __init__(self, spark: SparkSession, base_path: str):
         self.spark = spark
         self.base_path = base_path
-        self.cluster_partitions = cluster_partitions
         self.heal()
 
     def heal(self) -> dict[str, str]:
@@ -91,28 +109,34 @@ class SensorTableStore:
 
     # -- write path --------------------------------------------------------
 
-    def _prepare(self, df: DataFrame) -> DataFrame:
-        """Shuffle ON the partition column, so each output file covers
-        exactly one date: one file per date per table, independent of
-        task count. Repartitioning on sensor_index instead would emit
-        tasks × dates files (the classic partitioned-write small-file
-        explosion — measured 5x slower at sf0.1). Rows stay clustered
-        by (sensor_index, ts) within each file via the local sort,
-        which is what gives row-group min/max pruning on sensor lookups.
+    @staticmethod
+    def _prepare(df: DataFrame) -> DataFrame:
+        """The store's one file layout, for every write (append, upsert,
+        compaction). Shuffle ON the (`_dated`) partition column, so each
+        output file covers exactly one date: one file per date per
+        table, independent of task count. Repartitioning on
+        sensor_index instead would emit tasks × dates files (the classic
+        partitioned-write small-file explosion — measured 5x slower at
+        sf0.1). The local sort leads with the date, so the partitioned
+        writer keeps it and each file holds its rows in (sensor_index,
+        ts) order, which is what gives row-group min/max pruning on
+        sensor lookups.
         """
-        clustered = df.withColumn(
-            PARTITION_COL, F.to_date(F.col("data_time_stamp"))
-        )
-        n = self.cluster_partitions
-        args = ([n] if n else []) + [F.col(PARTITION_COL)]
-        return clustered.repartition(*args).sortWithinPartitions(
-            PARTITION_COL, "sensor_index", "data_time_stamp"
+        return (
+            _dated(df)
+            .repartition(F.col(PARTITION_COL))
+            .sortWithinPartitions(PARTITION_COL, "sensor_index", "data_time_stamp")
         )
 
     @staticmethod
-    def _batch_dates(wide: DataFrame) -> list:
-        day = F.to_date(F.col("data_time_stamp"))
-        return [r[0] for r in wide.select(day).distinct().collect()]
+    def _batch_dates(batch: DataFrame) -> list:
+        """The dates a `_dated` batch touches."""
+        return [r[0] for r in batch.select(PARTITION_COL).distinct().collect()]
+
+    @staticmethod
+    def _project(df: DataFrame, table: str) -> DataFrame:
+        """``table``'s columns of a dated wide frame."""
+        return df.select(*S.table_schema(table).fieldNames(), PARTITION_COL)
 
     def append_wide(
         self, wide: DataFrame, *, dedup_against_existing: bool = False
@@ -138,7 +162,7 @@ class SensorTableStore:
         """
 
         def build() -> dict[str, DataFrame]:
-            batch = wide.dropDuplicates(S.KEY_COLUMNS)
+            batch = _dated(wide.dropDuplicates(S.KEY_COLUMNS))
             if dedup_against_existing and os.path.isdir(self.path(S.STATION)):
                 batch = materialize_once(batch, serialized=True, eager=True)
                 existing = (
@@ -148,10 +172,7 @@ class SensorTableStore:
                 )
                 batch = batch.join(existing, on=S.KEY_COLUMNS, how="left_anti")
             laid = materialize_once(self._prepare(batch), serialized=True, eager=True)
-            return {
-                t: laid.select(*S.table_schema(t).fieldNames(), PARTITION_COL)
-                for t in S.TABLE_NAMES
-            }
+            return {t: self._project(laid, t) for t in S.TABLE_NAMES}
 
         self._publish(build, keep_live=True)
 
@@ -159,35 +180,37 @@ class SensorTableStore:
         """Upsert: new readings insert, existing PKs take the batch's
         values — partition-scoped, crash-safe MERGE on plain parquet.
 
-        Only the date partitions the batch touches are rewritten:
-        stored rows from those partitions that are NOT in the batch
-        survive via anti-join + union. Work is O(touched partitions),
-        never O(table) — the parquet equivalent of Delta MERGE for this
-        PK shape. The rewrite goes through `_publish`: replacement
+        Only the date partitions the batch touches (UTC days, in any
+        session time zone) are rewritten: stored rows from those
+        partitions that are NOT in the batch survive, with their stored
+        ``reading_date``, via anti-join + union. Work is O(touched
+        partitions), never O(table) — the parquet equivalent of Delta
+        MERGE for this PK shape. ``wide`` is read exactly once, like an
+        append's: the deduplicated batch is stored eagerly, and each
+        table lays out (`_prepare`) a column projection of it plus its
+        survivors. The rewrite goes through `_publish`: replacement
         partitions are staged to sibling dirs (readers never see
         them), then rename-swapped in only after the snapshot commits;
         a crash at any point leaves every table wholly old or wholly
         new, and `heal` finishes or discards the interrupted rewrite.
         """
-        wide = wide.dropDuplicates(S.KEY_COLUMNS)
 
         def build() -> dict[str, DataFrame]:
-            batch_dates = self._batch_dates(wide)
+            batch = materialize_once(
+                _dated(wide.dropDuplicates(S.KEY_COLUMNS)), serialized=True, eager=True
+            )
+            batch_dates = self._batch_dates(batch)
+            keys = batch.select(*S.KEY_COLUMNS)
             frames = {}
-            for table, part in vertical_split(wide).items():
-                out = part
+            for table in S.TABLE_NAMES:
+                out = self._project(batch, table)
                 if os.path.isdir(self.path(table)):
                     survivors = (
                         self._scan(table)
                         .filter(F.col(PARTITION_COL).isin(batch_dates))
-                        .drop(PARTITION_COL)
-                        .join(
-                            part.select(*S.KEY_COLUMNS),
-                            on=S.KEY_COLUMNS,
-                            how="left_anti",
-                        )
+                        .join(keys, on=S.KEY_COLUMNS, how="left_anti")
                     )
-                    out = part.unionByName(survivors)
+                    out = out.unionByName(survivors)
                 frames[table] = self._prepare(out)
             return frames
 
@@ -251,9 +274,11 @@ class SensorTableStore:
             # The stagings are submitted from driver threads so they
             # share the executor pool concurrently (narrow jobs rarely
             # saturate it); their targets are disjoint directories, so
-            # ordering is irrelevant. An append's frames project one
-            # stored layout instead of running nine pipelines that each
-            # re-read the source and re-shuffle: a 950-row poll went
+            # ordering is irrelevant. Every frame is in `_prepare`'s one
+            # layout, its dates the UTC days of `_dated`. An upsert's
+            # frames project one stored batch, an append's one stored
+            # layout, instead of nine pipelines that each re-read the
+            # source (and re-shuffle): a 950-row poll went
             # from 39 jobs and 6.2-8.0 s to 16 jobs and 3.6-4.2 s, and
             # bench.py's sf0.1 events ingest (100k rows) stayed at a
             # median 8.65 s (7.0-10.8 s before, 7.5-9.6 s after), so
@@ -293,15 +318,15 @@ class SensorTableStore:
 
     def read_range(self, table: str, *, start_epoch: int, end_epoch: int) -> DataFrame:
         """``table``'s rows with ``start_epoch <= data_time_stamp <
-        end_epoch``. The range's ``reading_date`` bounds (`_prepare`'s
-        `to_date`, in the session time zone) become partition filters,
-        so the scan lists and reads only the dates in range."""
+        end_epoch``. The range's UTC days (`_dated`'s rule, in any
+        session time zone) become literal ``reading_date`` partition
+        filters, so the scan lists and reads only the dates in range."""
         start = F.timestamp_seconds(F.lit(start_epoch))
         end = F.timestamp_seconds(F.lit(end_epoch))
         ts, day = F.col("data_time_stamp"), F.col(PARTITION_COL)
         return (
             self._scan(table)
-            .filter((day >= F.to_date(start)) & (day <= F.to_date(end)))
+            .filter(day.between(_epoch_date(start_epoch), _epoch_date(end_epoch)))
             .filter((ts >= start) & (ts < end))
             .drop(PARTITION_COL)
         )
@@ -348,28 +373,26 @@ class SensorTableStore:
             shutil.rmtree(os.path.join(self.path(table), entry))
         return dropped
 
-    def compact(self, table: str, *, target_partitions: int) -> None:
-        """Compaction job: rewrite a table to ``target_partitions``
-        files per date partition (small-file cleanup for long-running
-        streaming appends). Crash-safe as a one-member `_publish`
-        snapshot — an interrupted compaction heals forward or backward,
-        never a loss — that fails with `atomic.SnapshotLeaseHeld`
-        instead of racing a concurrent write.
+    def compact(self, table: str) -> None:
+        """Compaction job: rewrite a table to one file per date
+        partition in the store's one layout (`_prepare`: rows in
+        (sensor_index, ts) order; small-file cleanup for long-running
+        streaming appends). Rows keep their stored ``reading_date``.
+        Crash-safe as a one-member `_publish` snapshot — an interrupted
+        compaction heals forward or backward, never a loss — that fails
+        with `atomic.SnapshotLeaseHeld` instead of racing a concurrent
+        write.
         """
-        self._compact(table, target_partitions)
+        self._compact(table)
 
-    def _compact(self, table: str, target_partitions: int, dates=None) -> None:
+    def _compact(self, table: str, dates=None) -> None:
         """Rewrite ``table``'s ``dates`` partitions (all when None)."""
 
         def build() -> dict[str, DataFrame]:
             df = self._scan(table)
             if dates is not None:
                 df = df.filter(F.col(PARTITION_COL).isin(dates))
-            return {
-                table: df.repartition(
-                    target_partitions, "sensor_index"
-                ).sortWithinPartitions("sensor_index", "data_time_stamp")
-            }
+            return {table: self._prepare(df)}
 
         self._publish(build, (table,))
 
@@ -411,22 +434,16 @@ class SensorTableStore:
             "policy_retention", table, {"keep_days": int(keep_days)}
         )
 
-    def add_compression_policy(
-        self, table: str, *, after_days: int, target_partitions: int = 1
-    ) -> bool:
+    def add_compression_policy(self, table: str, *, after_days: int) -> bool:
         """Register a compression/compaction policy: date partitions
-        older than ``after_days`` are rewritten to ``target_partitions``
-        ZSTD files clustered on (sensor_index, ts) — the Spark analog
-        of Timescale's `add_compression_policy(..., INTERVAL '14 days')`
+        (UTC days) older than ``after_days`` are rewritten to one ZSTD
+        file each in the store's one layout, rows in (sensor_index, ts)
+        order — the Spark analog of Timescale's
+        `add_compression_policy(..., INTERVAL '14 days')`
         (`PurpleAirPSQLDataLogger.py:129-136`). Add-if-absent like
         `add_retention_policy`."""
         return self._add_policy(
-            "policy_compression",
-            table,
-            {
-                "after_days": int(after_days),
-                "target_partitions": int(target_partitions),
-            },
+            "policy_compression", table, {"after_days": int(after_days)}
         )
 
     def add_stream_compaction_policy(
@@ -532,10 +549,7 @@ class SensorTableStore:
                 )
             elif p["proc_name"] == "policy_compression":
                 results[key] = self.compact_older_than(
-                    p["table"],
-                    after_days=p["config"]["after_days"],
-                    target_partitions=p["config"]["target_partitions"],
-                    now=now,
+                    p["table"], after_days=p["config"]["after_days"], now=now
                 )
             elif p["proc_name"] == "policy_stream_compaction":
                 from purpleair_data_logger_spark.streaming import (
@@ -554,20 +568,14 @@ class SensorTableStore:
                 )
         return results
 
-    def compact_older_than(
-        self,
-        table: str,
-        *,
-        after_days: int,
-        target_partitions: int = 1,
-        now=None,
-    ) -> int:
+    def compact_older_than(self, table: str, *, after_days: int, now=None) -> int:
         """Compression-tier rewrite bounded to COLD date partitions
-        (older than ``after_days``): each is rewritten in place to
-        ``target_partitions`` clustered ZSTD files via `_compact`'s
-        one-member snapshot. Hot partitions are untouched, so the job's
-        cost is bounded by the cold set, not table size. Returns the
-        number of partitions rewritten."""
+        (UTC days older than ``after_days``): each is rewritten in place
+        to one ZSTD file in the store's one layout (`_prepare`) via
+        `_compact`'s one-member snapshot. Hot partitions are untouched,
+        so the job's cost is bounded by the cold set, not table size.
+        Returns the number of partitions rewritten. Policy files whose
+        config still carries the old file-count field run unchanged."""
         if not os.path.isdir(self.path(table)):
             return 0
         self.heal()
@@ -576,7 +584,7 @@ class SensorTableStore:
             # the staged rewrite carries ONLY the cold partitions, and the
             # commit swap is O(staged partitions): hot data is never read,
             # rewritten, or renamed — the job's cost is the cold set.
-            self._compact(table, target_partitions, cold)
+            self._compact(table, cold)
         return len(cold)
 
     def drop_all(self, *, confirm: bool) -> None:

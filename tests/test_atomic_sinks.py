@@ -38,7 +38,7 @@ def _wide(spark, ts, rows):
 
 def _seeded_store(spark, tmp_path):
     """Two dates, two sensors, all nine tables."""
-    store = SensorTableStore(spark, str(tmp_path / "tables"), cluster_partitions=2)
+    store = SensorTableStore(spark, str(tmp_path / "tables"))
     store.append_wide(_wide(spark, BASE_TS, [[1, "s1", 40, 1.5, 0], [2, "s2", 50, 2.5, 0]]))
     store.append_wide(_wide(spark, BASE_TS + 86400, [[1, "s1", 41, 1.6, 0]]))
     return store
@@ -70,7 +70,7 @@ def test_crash_before_commit_rolls_forward(spark, tmp_path):
     _stage_upsert_then_crash(spark, store)
     assert os.path.isdir(atomic.staging_path(store.path(S.ENVIRONMENTAL)))
 
-    reopened = SensorTableStore(spark, store.base_path, cluster_partitions=2)
+    reopened = SensorTableStore(spark, store.base_path)
     assert not os.path.isdir(atomic.staging_path(reopened.path(S.ENVIRONMENTAL)))
     env = {
         (r["sensor_index"], r["data_time_stamp"]): r["humidity"]
@@ -93,7 +93,7 @@ def test_crash_mid_swap_rolls_forward(spark, tmp_path):
     )
     os.rename(os.path.join(live, entry), os.path.join(live, entry) + atomic.RETIRED_SUFFIX)
 
-    reopened = SensorTableStore(spark, store.base_path, cluster_partitions=2)
+    reopened = SensorTableStore(spark, store.base_path)
     rows = reopened.read(S.ENVIRONMENTAL).collect()
     assert len(rows) == 3
     assert not any(
@@ -115,7 +115,7 @@ def test_crash_with_incomplete_staging_rolls_back(spark, tmp_path):
     with open(os.path.join(staged, f"{PARTITION_COL}=2022-08-05", "junk.parquet"), "w") as f:
         f.write("partial garbage")
 
-    reopened = SensorTableStore(spark, store.base_path, cluster_partitions=2)
+    reopened = SensorTableStore(spark, store.base_path)
     assert not os.path.isdir(staged)
     after = sorted(
         (r["sensor_index"], r["data_time_stamp"], r["humidity"])
@@ -208,7 +208,7 @@ def test_snapshot_crash_between_table_commits_rolls_all_forward(spark, tmp_path)
     for t in list(parts)[:3]:
         atomic.commit(store.path(t))
 
-    reopened = SensorTableStore(spark, store.base_path, cluster_partitions=2)
+    reopened = SensorTableStore(spark, store.base_path)
     pks = _pk_sets(reopened)
     assert len(set(pks.values())) == 1  # all nine tables agree on PKs
     env = {
@@ -239,7 +239,7 @@ def test_snapshot_crash_mid_staging_rolls_all_back(spark, tmp_path):
 
     assert atomic.is_committed(atomic.staging_path(store.path(S.ENVIRONMENTAL)))
 
-    reopened = SensorTableStore(spark, store.base_path, cluster_partitions=2)
+    reopened = SensorTableStore(spark, store.base_path)
     assert _pk_sets(reopened) == before
     env_after = sorted(
         (r["sensor_index"], r["data_time_stamp"], r["humidity"])
@@ -257,7 +257,7 @@ def test_upsert_and_compact_end_to_end_after_crash_history(spark, tmp_path):
     upserts and compacts correctly afterwards."""
     store = _seeded_store(spark, tmp_path)
     _stage_upsert_then_crash(spark, store)
-    store = SensorTableStore(spark, store.base_path, cluster_partitions=2)
+    store = SensorTableStore(spark, store.base_path)
 
     store.upsert_wide(_wide(spark, BASE_TS, [[2, "s2", 77, 7.7, 0]]))
     env = {
@@ -267,7 +267,7 @@ def test_upsert_and_compact_end_to_end_after_crash_history(spark, tmp_path):
     assert len(env) == 3
     assert 77 in env.values() and 99 in env.values()
 
-    store.compact(S.ENVIRONMENTAL, target_partitions=1)
+    store.compact(S.ENVIRONMENTAL)
     assert store.read(S.ENVIRONMENTAL).count() == 3
     assert not os.path.isdir(atomic.staging_path(store.path(S.ENVIRONMENTAL)))
 
@@ -313,7 +313,7 @@ def test_failed_append_loses_no_reading_on_redelivery(spark, tmp_path, monkeypat
         with pytest.raises(RuntimeError, match="injected"):
             store.append_wide(batch, dedup_against_existing=True)
     # rolled back in all nine tables: not one file added or lost
-    reopened = SensorTableStore(spark, store.base_path, cluster_partitions=2)
+    reopened = SensorTableStore(spark, store.base_path)
     assert _store_files(store.base_path) == files
 
     reopened.append_wide(batch, dedup_against_existing=True)
@@ -338,25 +338,66 @@ def test_append_spanning_two_dates_adds_one_sorted_file_per_date(spark, tmp_path
         .unionByName(_wide(spark, day2 + 300, [[2, "s2", 52, 2.7, 0]]))
     )
     store.append_wide(batch, dedup_against_existing=True)
-    added = sorted(
-        p for p in set(_store_files(store.base_path)) - files if p.endswith(".parquet")
-    )
+    added = set(_store_files(store.base_path)) - files
     for t in S.TABLE_NAMES:
-        mine = [p for p in added if p.split(os.sep)[0] == t]
-        assert sorted(p.split(os.sep)[1] for p in mine) == [
-            f"{PARTITION_COL}=2022-08-05",
-            f"{PARTITION_COL}=2022-08-06",
-        ], t
-        for p in mine:
-            tbl = pq.read_table(os.path.join(store.base_path, p), columns=S.KEY_COLUMNS)
-            keys = list(
-                zip(
-                    tbl.column("sensor_index").to_pylist(),
-                    tbl.column("data_time_stamp").to_pylist(),
-                )
-            )
-            assert keys == sorted(keys), (t, p)
+        _assert_one_sorted_file_per_date(store, t, added)
     assert store.read(S.STATION).count() == 3 + 7
+
+
+def _assert_one_sorted_file_per_date(store, table, files):
+    """Of ``files`` (store-relative paths), ``table`` has exactly one
+    parquet file in each of the two seeded dates, its rows in
+    (sensor_index, data_time_stamp) order."""
+    mine = [p for p in files if p.endswith(".parquet") and p.split(os.sep)[0] == table]
+    assert sorted(p.split(os.sep)[1] for p in mine) == [
+        f"{PARTITION_COL}=2022-08-05",
+        f"{PARTITION_COL}=2022-08-06",
+    ], table
+    for p in mine:
+        tbl = pq.read_table(os.path.join(store.base_path, p), columns=S.KEY_COLUMNS)
+        keys = list(
+            zip(
+                tbl.column("sensor_index").to_pylist(),
+                tbl.column("data_time_stamp").to_pylist(),
+            )
+        )
+        assert keys == sorted(keys), (table, p)
+
+
+def test_compact_rewrites_each_date_to_one_sorted_file(spark, tmp_path):
+    """Compaction writes the store's one layout: a date whose files
+    hold a lower sensor id appended after a higher one comes out as one
+    file per date, rows in (sensor_index, data_time_stamp) order."""
+    store = _seeded_store(spark, tmp_path)
+    store.append_wide(_wide(spark, BASE_TS + 60, [[1, "s1", 42, 1.7, 0]]))
+    store.compact(S.ENVIRONMENTAL)
+    _assert_one_sorted_file_per_date(
+        store, S.ENVIRONMENTAL, _store_files(store.base_path)
+    )
+    assert store.read(S.ENVIRONMENTAL).count() == 4
+
+
+def test_partition_dates_are_utc_days_in_any_session_zone(spark, tmp_path):
+    """A store written in UTC, read and upserted under a session zone
+    whose calendar day differs: `read_range` finds the in-range row and
+    an upsert replaces its key without losing or duplicating any other
+    reading."""
+    early = 1659668400  # 2022-08-05 03:00 UTC, 2022-08-04 in Los Angeles
+    store = SensorTableStore(spark, str(tmp_path / "tables"))
+    for ts in (early - 86400, early):
+        store.append_wide(_wide(spark, ts, [[1, "s1", 40, 1.5, 0], [2, "s2", 50, 2.5, 0]]))
+    before = _keys(store)
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        got = store.read_range(S.STATION, start_epoch=early, end_epoch=early + 60)
+        assert got.count() == 2
+        store.upsert_wide(_wide(spark, early, [[1, "s1", 99, 9.9, 0]]))
+        assert _keys(store) == before
+        humidity = sorted(r["humidity"] for r in store.read(S.ENVIRONMENTAL).collect())
+        assert humidity == [40, 50, 50, 99]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
 
 
 def test_append_refused_while_another_writer_holds_the_lease(spark, tmp_path):

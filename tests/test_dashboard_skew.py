@@ -17,7 +17,7 @@ BASE = 1659708000  # hour-aligned
 
 
 def _seeded_store(spark, tmp_path) -> SensorTableStore:
-    store = SensorTableStore(spark, str(tmp_path / "t"), cluster_partitions=2)
+    store = SensorTableStore(spark, str(tmp_path / "t"))
     rows = []
     for sensor in (1, 2):
         for i in range(24):

@@ -61,3 +61,18 @@ def test_load_table_values_match_naive_utc_reading(spark):
         f"SELECT epoch_us(min(ts)) FROM read_parquet('{sf}/events.parquet')"
     ).fetchone()[0]
     assert spark_min == duck_min
+
+
+def test_load_table_runs_no_spark_job(spark):
+    """Every load is bound to its parquet footer's schema, so building
+    one infers nothing: no Spark job runs until the query does."""
+    sc = spark.sparkContext
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    before = jobs()
+    for table in pio.TABLES:
+        pio.load_table(spark, SF_DIRS[0], table)
+    assert jobs() == before

@@ -49,7 +49,7 @@ def test_jdbc_nine_table_roundtrip_matches_parquet_store(spark, tmp_path):
             ),
         )
     )
-    store = SensorTableStore(spark, str(tmp_path / "tables"), cluster_partitions=2)
+    store = SensorTableStore(spark, str(tmp_path / "tables"))
     store.append_wide(wide)
 
     parts = X.vertical_split(wide.dropDuplicates(S.KEY_COLUMNS))

@@ -39,7 +39,7 @@ def test_scalar_functions(spark):
 def test_cross_batch_idempotent_append(spark, tmp_path):
     """R6: re-delivering the same reading across micro-batches must not
     duplicate rows when dedup_against_existing is on."""
-    store = SensorTableStore(spark, str(tmp_path / "t"), cluster_partitions=2)
+    store = SensorTableStore(spark, str(tmp_path / "t"))
     payload = {
         "data_time_stamp": 1659710232,
         "fields": ["sensor_index", "name", "humidity"],
@@ -81,7 +81,7 @@ def test_csv_sink_quotes_commas(spark, tmp_path):
 def test_upsert_wide_replaces_existing_keys(spark, tmp_path):
     """Partition-scoped MERGE: existing PKs take new values, new PKs
     insert, untouched rows survive."""
-    store = SensorTableStore(spark, str(tmp_path / "u"), cluster_partitions=2)
+    store = SensorTableStore(spark, str(tmp_path / "u"))
     day1 = {
         "data_time_stamp": 1659710232,
         "fields": ["sensor_index", "name", "humidity"],

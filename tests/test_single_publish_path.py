@@ -1,8 +1,10 @@
 """Guard: every `SensorTableStore` write goes through the one staged
-publish (`_publish` over `sinks.atomic`'s snapshot protocol). No Spark
+publish (`_publish` over `sinks.atomic`'s snapshot protocol) in the one
+file layout (`_prepare`), dated by the one UTC-day rule. No Spark
 needed — an AST scan of `sinks/tables.py` that fails when a write
-targets a live table path, or when a second thread pool, heartbeat or
-commit routine appears."""
+targets a live table path, when a second thread pool, heartbeat or
+commit routine appears, or when a second layout or a session-zone date
+does."""
 
 from __future__ import annotations
 
@@ -62,3 +64,10 @@ def test_one_pool_one_heartbeat_one_commit():
     assert called.count("threading.Thread") == 1
     assert called.count("atomic.snapshot_commit") == 1
     assert "atomic.commit" not in called
+
+
+def test_one_layout_and_no_session_zone_date():
+    called = [c.func.attr for c in _calls() if isinstance(c.func, ast.Attribute)]
+    assert called.count("repartition") == 1
+    assert called.count("sortWithinPartitions") == 1
+    assert "to_date" not in called

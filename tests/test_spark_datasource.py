@@ -17,9 +17,49 @@ FIXTURES = sorted(glob.glob(os.path.join(REFERENCE_FIXTURES, "*.json"))) + [
 ]
 
 
+class CountingReader(ds.PurpleAirBatchReader):
+    """Appends one line to the ``read_log`` option's file per read."""
+
+    def read(self, partition):
+        with open(self.options["read_log"], "a") as fh:
+            fh.write("read\n")
+        yield from super().read(partition)
+
+
+class CountingDataSource(ds.PurpleAirDataSource):
+    @classmethod
+    def name(cls) -> str:
+        return "purpleair_read_counting"
+
+    def reader(self, schema):
+        return CountingReader(dict(self.options))
+
+
 @pytest.fixture(scope="module", autouse=True)
 def _register(spark):
     ds.register(spark)
+    spark.dataSource.register(CountingDataSource)
+
+
+def _counted_load(spark, tmp_path, ts, rows):
+    """A ``purpleair_read_counting`` frame of one multi-sensor payload,
+    logging its reads to ``tmp_path/reads.log``."""
+    p = tmp_path / f"m{ts}.json"
+    p.write_text(
+        json.dumps(
+            {
+                "data_time_stamp": ts,
+                "fields": ["sensor_index", "name", "pm2.5_atm"],
+                "data": rows,
+            }
+        )
+    )
+    return cast_epoch_to_timestamp(
+        spark.read.format("purpleair_read_counting")
+        .option("fixture_path", str(p))
+        .option("read_log", str(tmp_path / "reads.log"))
+        .load()
+    )
 
 
 def test_batch_read_single_sensor_fixture(spark):
@@ -103,7 +143,7 @@ def test_streaming_ingest_end_to_end(spark, tmp_path):
     }
     p = tmp_path / "m.json"
     p.write_text(json.dumps(payload))
-    store = SensorTableStore(spark, str(tmp_path / "tables"), cluster_partitions=2)
+    store = SensorTableStore(spark, str(tmp_path / "tables"))
     q = start_ingest(
         spark,
         store,
@@ -147,7 +187,7 @@ def test_ingest_routes_store_identical_rows(spark, tmp_path):
         paths[name].write_text(json.dumps(payload))
 
     stores = {
-        route: SensorTableStore(spark, str(tmp_path / route), cluster_partitions=2)
+        route: SensorTableStore(spark, str(tmp_path / route))
         for route in ("batch", "stream", "poll")
     }
     for p in paths.values():
@@ -188,50 +228,34 @@ def test_append_reads_its_source_once(spark, tmp_path):
     from purpleair_data_logger_spark.sinks.tables import SensorTableStore
 
     log = tmp_path / "reads.log"
-
-    class CountingReader(ds.PurpleAirBatchReader):
-        def read(self, partition):
-            with open(self.options["read_log"], "a") as fh:
-                fh.write("read\n")
-            yield from super().read(partition)
-
-    class CountingDataSource(ds.PurpleAirDataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "purpleair_read_counting"
-
-        def reader(self, schema):
-            return CountingReader(dict(self.options))
-
-    spark.dataSource.register(CountingDataSource)
-
-    def load(ts):
-        p = tmp_path / f"m{ts}.json"
-        p.write_text(
-            json.dumps(
-                {
-                    "data_time_stamp": ts,
-                    "fields": ["sensor_index", "name", "pm2.5_atm"],
-                    "data": [[1, "s1", 1.5], [2, "s2", 2.5]],
-                }
-            )
-        )
-        return (
-            spark.read.format("purpleair_read_counting")
-            .option("fixture_path", str(p))
-            .option("read_log", str(log))
-            .load()
-        )
-
-    store = SensorTableStore(spark, str(tmp_path / "tables"), cluster_partitions=2)
-    store.append_wide(cast_epoch_to_timestamp(load(1659710232)))
+    rows = [[1, "s1", 1.5], [2, "s2", 2.5]]
+    store = SensorTableStore(spark, str(tmp_path / "tables"))
+    store.append_wide(_counted_load(spark, tmp_path, 1659710232, rows))
     log.write_text("")
     store.append_wide(
-        cast_epoch_to_timestamp(load(1659710352)), dedup_against_existing=True
+        _counted_load(spark, tmp_path, 1659710352, rows), dedup_against_existing=True
     )
     assert log.read_text().splitlines() == ["read"]
     for t in S.TABLE_NAMES:
         assert store.read(t).count() == 4, t
+
+
+def test_upsert_reads_its_source_once(spark, tmp_path):
+    """An upsert into an existing store runs its source's read exactly
+    once, like an append: its nine tables store one response."""
+    from purpleair_data_logger_spark.sinks.tables import SensorTableStore
+
+    log = tmp_path / "reads.log"
+    ts = 1659710232
+    store = SensorTableStore(spark, str(tmp_path / "tables"))
+    store.append_wide(_counted_load(spark, tmp_path, ts, [[1, "s1", 1.5], [2, "s2", 2.5]]))
+    log.write_text("")
+    store.upsert_wide(_counted_load(spark, tmp_path, ts, [[2, "s2", 9.5], [3, "s3", 3.5]]))
+    assert log.read_text().splitlines() == ["read"]
+    for t in S.TABLE_NAMES:
+        assert store.read(t).count() == 3, t
+    pm = {r["sensor_index"]: r["pm2_5_atm"] for r in store.read(S.PM2_5).collect()}
+    assert pm == {1: 1.5, 2: 9.5, 3: 3.5}
 
 
 def test_streaming_replay_of_uncommitted_batch_lands_each_key_once(spark, tmp_path):
@@ -248,7 +272,7 @@ def test_streaming_replay_of_uncommitted_batch_lands_each_key_once(spark, tmp_pa
     }
     p = tmp_path / "m.json"
     p.write_text(json.dumps(payload))
-    store = SensorTableStore(spark, str(tmp_path / "tables"), cluster_partitions=2)
+    store = SensorTableStore(spark, str(tmp_path / "tables"))
     ckpt = tmp_path / "ckpt"
 
     def drain():

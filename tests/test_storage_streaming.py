@@ -34,7 +34,7 @@ def _multi_payload(ts, rows):
 
 
 def _store(spark, tmp_path) -> SensorTableStore:
-    return SensorTableStore(spark, str(tmp_path / "tables"), cluster_partitions=2)
+    return SensorTableStore(spark, str(tmp_path / "tables"))
 
 
 def test_append_read_reconstruct(spark, tmp_path):
@@ -109,7 +109,7 @@ def test_policy_catalog_f8_add_if_absent_and_run(spark, tmp_path):
     assert store.policy_catalog().count() == 2
 
     # persistence: a new store instance over the same path sees them
-    store2 = SensorTableStore(spark, store.base_path, cluster_partitions=2)
+    store2 = SensorTableStore(spark, store.base_path)
     assert store2.policy_catalog().count() == 2
 
     now = datetime.datetime.fromtimestamp(BASE_TS, datetime.timezone.utc)
@@ -3463,7 +3463,7 @@ def test_stream_compaction_policy_runs_on_maintenance_tick(spark, tmp_path):
     ]
 
     # a fresh store instance sees the persisted policy and runs it
-    store2 = SensorTableStore(spark, store.base_path, cluster_partitions=2)
+    store2 = SensorTableStore(spark, store.base_path)
     results = store2.run_policies()
     assert results["policy_stream_compaction:pack_sink"] == 2  # batches 0-1
     assert not os.path.exists(per_batch[0])
