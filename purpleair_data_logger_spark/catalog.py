@@ -35,21 +35,18 @@ from purpleair_data_logger_spark.queries._core import (  # noqa: F401
     register,
 )
 
-def _artifact_rounds() -> dict[str, int] | None:
+def _artifact_rounds() -> dict[str, int]:
     """Newest driver-gate round per query, read from the committed
-    ``CORRECTNESS_r*.json`` artifacts at the repo root. Returns None
-    when no artifacts are present (fresh clone / installed package) —
-    callers fall back to the hand-maintained gate lists."""
+    ``CORRECTNESS_r*.json`` artifacts at the repo root. A query no
+    artifact records is absent (round 0 to `all_queries`); with no
+    artifacts at all the dict is empty."""
     import json
     import re
     from pathlib import Path
 
     root = Path(__file__).resolve().parent.parent
-    files = sorted(root.glob("CORRECTNESS_r*.json"))
-    if not files:
-        return None
     newest: dict[str, int] = {}
-    for f in files:
+    for f in sorted(root.glob("CORRECTNESS_r*.json")):
         m = re.search(r"r(\d+)", f.name)
         if not m:
             continue
@@ -80,72 +77,43 @@ def all_queries() -> dict[str, Query]:
     """Registry in DRIVER-GATE order, not source order.
 
     The driver's correctness gate records the first 50 entries of this
-    dict per round. Since round 6 the ordering is COMPUTED from the
-    committed ``CORRECTNESS_r*.json`` artifacts (VERDICT r5 #1 —
-    automate the rotation policy instead of re-litigating it each
-    round): oracled queries sort oldest-artifact-first (never-gated
-    queries, round 0, lead), ties broken by registry order, and
-    rows-only (``oracle=None``) queries sort past every oracled one so
-    the 50-row window stays all-oracled by construction. With 113+
-    oracled queries and a 50-row window, every query is re-gated at
-    least every ⌈N/50⌉ = 3 rounds — the freshness horizon the r5
-    VERDICT asked to enforce ("no oracled query's newest driver row
-    exceeds ~4 rounds old"); `_validate_gate_lists` checks it
-    executable-ly against the artifacts.
-
-    When no artifacts are present (installed package, fresh clone) the
-    explicit `_GATE_PRIORITY` / `_GATE_DEFER` lists order the registry
-    as in rounds 1-5. Every query stays in the catalog — deferral only
-    moves a row past position 50, it never removes the oracle.
+    dict per round. The order is COMPUTED from the committed
+    ``CORRECTNESS_r*.json`` artifacts (VERDICT r5 #1 — automate the
+    rotation policy instead of re-litigating it each round): oracled
+    queries sort oldest-artifact-first (never-gated queries, round 0,
+    lead), ties broken by registry order; gate-retired queries follow,
+    and rows-only (``oracle=None``) queries sort past every oracled one
+    so the 50-row window stays all-oracled by construction. With no
+    artifacts every query is round 0, so each bucket keeps registry
+    order. With 113+ oracled queries and a 50-row window, every query
+    is re-gated at least every ⌈N/50⌉ = 3 rounds — the freshness
+    horizon the r5 VERDICT asked to enforce ("no oracled query's newest
+    driver row exceeds ~4 rounds old"); `_validate_gate_lists` checks
+    it executable-ly against the artifacts. Every query stays in the
+    catalog — the order only decides which rows the window records.
     """
     newest = _artifact_rounds()
-    if newest is not None:
-        idx = {name: i for i, name in enumerate(_REGISTRY)}
-
-        def _age(n: str) -> int:
-            # Touched-code boost (r14, VERDICT r13 #2/#3): a query
-            # whose IMPLEMENTATION was re-shaped by an optimization
-            # round after its newest gate round jumps to the front of
-            # the window so the driver oracle re-verifies the new
-            # code. Self-expiring: once a gate artifact from round
-            # >= _GATE_BOOST_ROUND records the query, the boost is
-            # inert and normal aging resumes.
-            if n in _GATE_BOOST and newest.get(n, 0) < _GATE_BOOST_ROUND:
-                return -1
-            return newest.get(n, 0)
-
-        names = sorted(
-            _REGISTRY,
-            key=lambda n: (
-                # 0 = rotating oracled, 1 = gate-retired (still in the
-                # catalog/sweep, never back in the window), 2 = rows-only
-                2
-                if _REGISTRY[n].oracle is None
-                else (1 if n in _GATE_RETIRED else 0),
-                _age(n),                      # oldest artifact first
-                idx[n],                       # stable registry tiebreak
-            ),
-        )
-        return {n: _REGISTRY[n] for n in names}
-    ordered: dict[str, Query] = {}
-    for name in _GATE_PRIORITY:
-        ordered[name] = _REGISTRY[name]
-    for name, q in _REGISTRY.items():
-        if name not in ordered and name not in _GATE_DEFER and name not in _GATE_RETIRED:
-            ordered[name] = q
-    for name in _GATE_DEFER:
-        ordered[name] = _REGISTRY[name]
-    for name in _GATE_RETIRED:
-        if name not in ordered:
-            ordered[name] = _REGISTRY[name]
-    return ordered
+    idx = {name: i for i, name in enumerate(_REGISTRY)}
+    names = sorted(
+        _REGISTRY,
+        key=lambda n: (
+            # 0 = rotating oracled, 1 = gate-retired (still in the
+            # catalog/sweep, never back in the window), 2 = rows-only
+            2
+            if _REGISTRY[n].oracle is None
+            else (1 if n in _GATE_RETIRED else 0),
+            newest.get(n, 0),             # oldest artifact first
+            idx[n],                       # stable registry tiebreak
+        ),
+    )
+    return {n: _REGISTRY[n] for n in names}
 
 
 # ---------------------------------------------------------------------------
 # Query registration (split into per-family modules in r12 — VERDICT
 # r11 #7). IMPORT ORDER IS LOAD-BEARING: it reproduces the original
 # single-file registration order, which `registered_names()` (bench
-# headline) and the no-artifact fallback of `all_queries()` depend on.
+# headline) and the registry tiebreak of `all_queries()` depend on.
 # ---------------------------------------------------------------------------
 
 from purpleair_data_logger_spark.queries import timeseries_filters  # noqa: E402, F401
@@ -158,154 +126,10 @@ from purpleair_data_logger_spark.queries import text_retrieval  # noqa: E402, F4
 from purpleair_data_logger_spark.queries import graph_sketches  # noqa: E402, F401
 
 # ---------------------------------------------------------------------------
-# Driver-gate ordering (see all_queries docstring). The driver records
-# correctness rows for the FIRST 50 entries; these lists decide which.
+# Driver-gate rotation (see all_queries docstring). The driver records
+# correctness rows for the FIRST 50 entries; the artifacts decide which,
+# and the ledger and guards below bound the rotation.
 # ---------------------------------------------------------------------------
-
-#: FALLBACK ordering only since round 6: when the committed
-#: CORRECTNESS_r*.json artifacts are present (they always are in the
-#: driver's checkout), `all_queries` computes the gate order from them
-#: directly — oldest-artifact-first, rows-only past the window — so
-#: rotation is automatic and these lists no longer need per-round
-#: hand-editing. They are kept (frozen at their r5 state) purely so an
-#: artifact-less install still gets a deterministic, all-oracled
-#: window.
-#: Queries whose OPERATOR CODE was re-shaped by the r13/r14
-#: optimization rounds after their newest driver-gate round (VERDICT
-#: r13 #2: the r13 sample missed the semantics-touching rewrites —
-#: substring coverage test, simhash F.expr fingerprint, centroid-norm
-#: literals, banded-DP spread — and r14 re-shaped the embedding LSH
-#: verify + incremental batch). Boosted to the front of the upcoming
-#: gate window so the oracle re-verifies the NEW code; the boost
-#: expires automatically once the query's newest artifact round equals
-#: the catalog's newest (see `_age` in all_queries). Only oracled,
-#: non-retired queries belong here (the all-oracled-window invariant
-#: is validated below either way).
-#: The boost targets the ROUND-14 gate: it applies until the query has
-#: an artifact row from round >= _GATE_BOOST_ROUND, then expires.
-_GATE_BOOST_ROUND = 14
-_GATE_BOOST: list[str] = [
-    "substring_search_trigram",
-    "simhash_neardups",
-    "ann_index_append",
-    "edit_distance_neardups",
-    "m4_lttb_downsample_events",
-    "embedding_neardup_lsh_verified",
-    "neardup_incremental_batch",
-]
-
-_GATE_PRIORITY: list[str] = [
-    "neardup_cluster_dedup",
-    "neardup_cluster_keep_best",
-    "corpus_build_final",
-    "neardup_incremental_batch",
-    "domain_cap_sample",
-    "document_chunking",
-    "sequence_packing",
-    "corpus_vocabulary",
-    "multimodal_frame_sample",
-    "dup_ngram_fraction",      # new in r4
-    "gopher_quality_gate",     # new in r4
-    "keyword_extraction",      # new in r4
-    "embedding_cluster_dedup", # new in r4
-    "bigram_collocations",     # new in r4
-    "containment_neardups",    # new in r4
-    "part_brand_revenue",      # new in r4
-    "cross_doc_dup_ngrams",    # new in r4
-    "unigram_rarity",          # new in r4
-    "cross_doc_span_removal",  # new in r4
-    "knn_filtered",            # new in r4
-    "multimodal_resize",       # new in r4
-    "token_budget_mixture",    # new in r4
-    "quality_classifier_gate", # new in r4
-    "time_weighted_hourly",    # new in r4
-    "sensor_spike_detection",  # new in r4
-    "gapfill_interpolate_hourly",  # new in r4
-    "ccnet_quality_buckets",   # new in r4
-    "corpus_accounting_rollup",  # new in r4
-    "weekly_retention_cohorts",  # new in r4
-    "m4_downsample_15min",     # new in r4
-    "value_percentiles_by_event_type",  # new in r4
-    "sliding_active_users",    # new in r4
-    "asof_next_error",         # new in r4 (restores an in-window temporal-join gate)
-    "dq_report_events",        # new in r4 (the quality-gate component)
-    # --- r5 rotation: the five oracled queries that had no driver row
-    # across r1-r4 (judge-verified green at sf0.01 in VERDICT r4); four
-    # multiply-green r4 rows with still-gated family siblings moved to
-    # _GATE_DEFER to make room (VERDICT r4 ask #2).
-    "token_fertility_by_lang",     # rotated in r5 (never driver-gated)
-    "mode_value_by_event_type",    # rotated in r5 (never driver-gated)
-    "winsorized_event_values",     # rotated in r5 (never driver-gated)
-    "value_trend_by_user",         # rotated in r5 (never driver-gated)
-    "downtime_incidents",          # rotated in r5 (never driver-gated)
-    "state_agg_user_event",        # new in r5 (TimescaleDB state_agg)
-    "state_timeline_transitions",  # new in r5 (TimescaleDB timeline_agg)
-    "frequent_tokens_by_lang",     # new in r5 (per-group heavy hitters; the ungrouped variant gate-retired r12)
-    "state_durations_hourly",      # new in r5 (TimescaleDB duration_in)
-    "cusum_drift_by_user",         # new in r5 (CUSUM via window algebra)
-    "mad_outliers_by_event_type",  # new in r5 (MAD robust outliers)
-    "stats2d_click_error_by_user", # new in r5 (exact stats_agg 2D)
-    "embedding_quantize_int8",     # new in r5 (SQ8 encode stage)
-    "knn_quantized_rescored",      # new in r5 (SQ8 ANN search stage)
-    "pricing_summary",             # new in r5 (TPC-H Q1 exact-cents flagship)
-]
-
-#: Pushed past the 50-row window: every entry here is hash-green in
-#: CORRECTNESS_r03.json (driver artifact, not judge-side) AND is either
-#: a deliberate quadratic/brute-force baseline whose production
-#: replacement stays gated, or a trivial variant subsumed by a
-#: still-gated query. Deferral keeps the oracle in the catalog — the
-#: judge can still driver_sim any of these.
-_GATE_DEFER: list[str] = [
-    "json_props_extract",        # X-scalar subset; r1-r3 green
-    "jaccard_neardup_blocked",   # O(block²) baseline for neardup_lsh_verified
-    "embedding_neardup_cosine",  # O(block²) baseline for embedding_neardup_lsh_verified
-    "knn_cosine_bruteforce",     # brute-force baseline for knn_lsh_bucketed
-    "approx_distinct_profile",   # no_oracle by design (HLL estimates pytest-pinned); rows-only gate adds nothing
-    "multimodal_metadata",       # scalar metadata projection; r1-r3 green (features + frame_sample still gated)
-    "hash_sample_stratified",    # same md5-bucket family as train_val_test_split + domain_cap_sample (both still gated); r2-r3 green
-    "benchmark_contamination",   # r2-r3 green; same operator gates inside corpus_build_final + streaming decontamination test
-    "vertical_split_rejoin",     # T4; r2-r3 green ×2, and the PK rejoin family keeps the entry() smoke + broadcast-dims plan pin + bucketed zero-shuffle pytest every round
-    "sessionize_users",          # r2-r3 green ×2; the streaming session_window variant is pytest-pinned and asof/range-join still gate the temporal-join family
-    "text_quality",              # r1-r3 green ×3; gopher_quality_gate (still gated) evaluates a superset of the same feature family
-    "corpus_token_accounting",   # r1-r3 green ×3; corpus_build_final (still gated) computes the same per-split accounting inside its composition
-    "lang_id",                   # r1-r3 green ×3; corpus_curation_pipeline (still gated) hash-checks the same language predictions inside its composition
-    "knn_ivf",                   # no_oracle rows-only by design — the driver row adds nothing over the pytest recall pin; knn_filtered/knn_lsh_bucketed still gate the ANN family with full oracles
-    "knn_ivf_quantized",         # no_oracle rows-only by design (iterative k-means index build, the knn_ivf precedent); recall + plan shape pytest-pinned, SQ8 encode fully oracled via embedding_quantize_int8/knn_quantized_rescored
-    "pii_scrub",                 # r2-r3 green ×2; the same scrub stage gates inside corpus_curation_pipeline (still gated)
-    "paragraph_dedup_boilerplate",  # r2-r3 green ×2; dedup family still gated via dedup_exact_docs + cluster layer, reassembly pytest-pinned
-    "asof_last_click",           # r1-r3 green ×3; the temporal-join family stays gated via asof_next_error (in-window, same merge-scan), and the plan shape is pytest-pinned
-    "bpe_train_encode",          # no_oracle by design (iterative merge training) — the rows-only driver row adds nothing over the pytest reference-trainer parity pins (the knn_ivf precedent); keeping it out preserves an all-oracled 50-row window
-    "snapshot_filters",          # r1-r3 green ×3; predicate pushdown is pytest-pinned and historic_range_downsample (still gated) exercises the same filter family
-    "sensor_directory",          # r1-r3 green ×3 (A5 DISTINCT directory); the directory-correlation family stays gated via semi_join_show_only and the X1/X2 scalars are pytest-pinned
-    "multimodal_features",       # r1-r3 green ×3; the mapInPandas decode family stays gated via multimodal_frame_sample + multimodal_resize (both newly windowed)
-    "top_docs_per_lang",         # r1-r3 green ×3; the stratified top-k family stays gated inside corpus_curation_pipeline's selection stage
-    "dedup_exact_docs",          # r1-r3 green ×3; the exact-dedup family stays gated via corpus_curation_pipeline's md5 dedup stage and the cluster-dedup layer
-    "simhash_neardups",          # r2-r3 green ×2; the LSH near-dup family stays gated three ways (minhash candidates, lsh_verified, incremental) and the simhash collision fixture is pytest-pinned
-    "historic_range_downsample",  # r1-r3 green ×3; the range-filter + downsample family stays gated via hourly_continuous_aggregate and the pushdown pins
-    "range_join_click_error",    # r3 green; the temporal-join family stays gated via asof_next_error (in-window) and keeps the no-nested-loop plan pin + stream-stream interval-join parity test
-    "hourly_continuous_aggregate",  # r1-r3 green ×3 (A1); the tumbling-bucket family stays gated via time_weighted_hourly + the gapfill pair, and the streaming continuous-aggregate path is pytest-pinned
-    "rolling_avg_trailing_1h",   # r1-r3 green ×3 (A4/R3); the trailing range-frame family stays gated via sensor_spike_detection (same frame, same key) and rolling_pseudo_averages' r3 row
-    "knn_lsh_bucketed",          # r1-r3 green ×3; the ANN family stays gated via knn_filtered (same hyperplane-LSH bucketing + predicate) plus pytest recall pins vs the brute-force baseline
-    "train_val_test_split",      # r2-r3 green ×2; leakage_safe_split (still gated) is the production split path and assign_split's bucket ranges are property-tested
-    "neardup_lsh_verified",      # r1-r3 green ×3; the MinHash near-dup family stays gated four ways in-window (minhash_lsh_candidates, neardup_incremental_batch, the cluster-dedup layer, corpus_build_final's mining stage)
-    "minhash_lsh_candidates",    # r1-r3 green ×3; the candidates stage still gates inside neardup_incremental_batch, the cluster-dedup layer, and corpus_build_final's mining stage (all in-window), and the band/recall math is pytest-pinned
-    "embedding_neardup_lsh_verified",  # r2-r3 green ×2; the hyperplane-LSH family stays gated via embedding_cluster_dedup + knn_filtered (both in-window) and the full-pipeline DuckDB oracle remains in the catalog
-    "semi_join_show_only",       # r1-r3 green ×3; the J2/J3 broadcast semi-join plan shape is pytest-pinned (test_plans.py::test_semi_join_broadcasts_filter_table) and the directory workload keeps sensor_directory's r1-r3 rows
-    "neardup_clusters_star",     # r4 green; the cluster layer stays gated ×2 in-window (neardup_cluster_dedup, neardup_cluster_keep_best) and both CC algorithms keep their adversarial-graph pytest parity
-    "counter_delta_hourly",      # r4 green; the two-tier lag family stays gated via value_trend_by_user (rotated in, same shape) and the streaming counter mirror keeps its batch-parity pytest
-    "quality_percentile_gate",   # r4 green; the percent-rank-gate family stays gated via ccnet_quality_buckets + dq_report_events (both in-window) and the cutoff math is shared with the r5-gated winsorized/percentile rows
-    "weighted_sample_docs",      # r4 green; the A-Res priority-sampling family stays gated via token_budget_mixture (in-window, same WindowGroupLimit shape) + domain_cap_sample
-    "event_type_pivot",          # r4 green; the grouping-sets family stays gated via corpus_accounting_rollup (in-window ROLLUP superset) and the pivot column-expansion is pytest-pinned
-    "conversion_funnel",         # r4 green; the ordered-event-analytics family stays gated via weekly_retention_cohorts (in-window) and the stage-ordering semantics are pytest-pinned
-    "vocab_encode",              # r4 green; corpus_vocabulary (in-window) gates the same top-k vocab build, and the encode application is pytest-pinned against it
-    "bigram_lm_fluency",         # r4 green; bigram_collocations (in-window) gates the same bigram-count aggregate, and the LM scoring math is pytest-pinned
-    "heartbeat_uptime_hourly",   # r4 green; the interval/gap family stays gated ×2 in-window (downtime_incidents, time_weighted_hourly) and the streaming heartbeat mirror keeps its batch-parity pytest
-    "shipping_priority_topk",    # r4 green; the TakeOrderedAndProject top-k shape is pytest-pinned and the per-group limit family stays gated via token_budget_mixture + domain_cap_sample (both in-window)
-    "zorder_key_events",         # r4 green; the O3 physical-layout evidence is pytest-owned (footer-skipping + zero-shuffle bucketed suites); the gate row was a plain groupBy over the clustered table
-    "leakage_safe_split",        # r4 green; its split stage is re-gated inside corpus_build_final (in-window) and the CC family keeps neardup_cluster_dedup + keep_best in-window
-]
-
 
 #: Oracled queries RETIRED from the driver-gate rotation (VERDICT r11
 #: #4: the rotation capacity is GATE_WINDOW × FRESHNESS_HORIZON_ROUNDS
@@ -366,29 +190,9 @@ GATE_HEADROOM_MIN = 50
 
 
 def _validate_gate_lists() -> None:
-    for lst, label in (
-        (_GATE_PRIORITY, "_GATE_PRIORITY"),
-        (_GATE_DEFER, "_GATE_DEFER"),
-        (_GATE_RETIRED, "_GATE_RETIRED"),
-    ):
-        unknown = [n for n in lst if n not in _REGISTRY]
-        if unknown:
-            raise RuntimeError(f"{label} names not in registry: {unknown}")
-    overlap = set(_GATE_PRIORITY) & (set(_GATE_DEFER) | set(_GATE_RETIRED))
-    if overlap:
-        raise RuntimeError(f"queries both prioritized and deferred/retired: {overlap}")
-    # the two non-priority ledgers must not disagree about a query's
-    # rotation status, and no list may carry duplicates (code-review
-    # r12: 19 retired names and one literal duplicate had accreted in
-    # _GATE_DEFER, silently resolved by dict-dedup in the fallback)
-    both = set(_GATE_DEFER) & set(_GATE_RETIRED)
-    if both:
-        raise RuntimeError(f"queries both deferred and retired: {both}")
-    dupes = {n for n in _GATE_DEFER if _GATE_DEFER.count(n) > 1} | {
-        n for n in _GATE_PRIORITY if _GATE_PRIORITY.count(n) > 1
-    }
-    if dupes:
-        raise RuntimeError(f"duplicate names in gate lists: {dupes}")
+    unknown = [n for n in _GATE_RETIRED if n not in _REGISTRY]
+    if unknown:
+        raise RuntimeError(f"_GATE_RETIRED names not in registry: {unknown}")
     # Retirement eligibility (COVERAGE.md §"Gate rotation & retirement"):
     # only oracled queries can retire (rows-only never rotate anyway),
     # and each must have at least one recorded driver-gate round — a
@@ -396,9 +200,9 @@ def _validate_gate_lists() -> None:
     not_oracled = [n for n in _GATE_RETIRED if _REGISTRY[n].oracle is None]
     if not_oracled:
         raise RuntimeError(f"_GATE_RETIRED lists rows-only queries: {not_oracled}")
-    rounds_seen = _artifact_rounds()
-    if rounds_seen is not None:
-        never_gated = [n for n in _GATE_RETIRED if not rounds_seen.get(n)]
+    newest = _artifact_rounds()
+    if newest:
+        never_gated = [n for n in _GATE_RETIRED if not newest.get(n)]
         if never_gated:
             raise RuntimeError(
                 "_GATE_RETIRED lists queries with no recorded driver-gate "
@@ -407,8 +211,8 @@ def _validate_gate_lists() -> None:
     # the driver's correctness gate records the first 50 rows of
     # all_queries(); keeping that window all-oracled is a standing
     # invariant — a rows-only query slipping in silently weakens the
-    # gate. Holds by construction under artifact ordering; checked
-    # here so the explicit-list fallback can never break it either.
+    # gate. Holds by construction of the sort key; checked here so a
+    # regressed ordering fails at import.
     window = list(all_queries())[:GATE_WINDOW]
     unoracled = [n for n in window if _REGISTRY[n].oracle is None]
     if unoracled:
@@ -452,7 +256,6 @@ def _validate_gate_lists() -> None:
     # oldest-artifact-first ordering satisfies this structurally; the
     # check fires if the catalog ever outgrows the window's rotation
     # capacity (or someone regresses the ordering).
-    newest = _artifact_rounds()
     if newest:
         upcoming = max(newest.values()) + 1
         stale = [

@@ -55,6 +55,14 @@ def _token_set(text_col: str, sep: str = " ") -> Column:
     return F.array_distinct(F.split(F.col(text_col), sep))
 
 
+def _jaccard(a: str, b: str) -> Column:
+    """Exact Jaccard of two distinct-element array columns, rounded to
+    4 places — the one verify every near-dup path shares."""
+    inter = F.size(F.array_intersect(F.col(a), F.col(b)))
+    union = F.size(F.array_union(F.col(a), F.col(b)))
+    return F.round(inter.cast("double") / union.cast("double"), 4)
+
+
 def jaccard_pairs_blocked(
     df: DataFrame,
     id_col: str,
@@ -88,15 +96,12 @@ def jaccard_pairs_blocked(
     cond = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in block_cols] + [
         F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
     ]
-    inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
-    union = F.size(F.array_union(F.col("a.toks"), F.col("b.toks")))
-    jac = inter.cast("double") / union.cast("double")
     return (
         a.join(b, on=cond, how="inner")
         .select(
             F.col(f"a.{id_col}").alias("doc_id_a"),
             F.col(f"b.{id_col}").alias("doc_id_b"),
-            F.round(jac, 4).alias("jaccard"),
+            _jaccard("a.toks", "b.toks").alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )
@@ -609,11 +614,8 @@ def neardup_against_index(
         cands.join(sn, on=F.col("new_doc_id") == F.col("_sid")).drop("_sid")
         .join(sb, on="base_doc_id")
     )
-    inter = F.size(F.array_intersect(F.col("_sh_a"), F.col("_sh_b")))
-    union = F.size(F.array_union(F.col("_sh_a"), F.col("_sh_b")))
-    jac = F.round(inter.cast("double") / union.cast("double"), 4)
     return (
-        j.select("new_doc_id", "base_doc_id", jac.alias("jaccard"))
+        j.select("new_doc_id", "base_doc_id", _jaccard("_sh_a", "_sh_b").alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -825,12 +827,10 @@ def _fetch_candidate_shingles(
     text_col: str,
     shingle_n: int,
     cands: DataFrame,
-    left_col: str = "doc_id_a",
-    right_col: str = "doc_id_b",
 ) -> DataFrame:
-    """Attach both sides' shingle sets to the candidate pairs — the
-    shared verify-fetch stage of `neardup_lsh_verified` /
-    `containment_lsh_verified`.
+    """Attach both sides' shingle sets to the (doc_id_a, doc_id_b)
+    candidate pairs — the shared verify-fetch stage of
+    `neardup_lsh_verified` / `containment_lsh_verified`.
 
     The shingle tables are built ONLY for documents that appear in a
     candidate pair (r13, guide §8 "decide with small rows"): a cheap
@@ -855,10 +855,10 @@ def _fetch_candidate_shingles(
 
     return (
         cands.join(
-            side(left_col, "_sh_a"), on=F.col(left_col) == F.col("_sid")
+            side("doc_id_a", "_sh_a"), on=F.col("doc_id_a") == F.col("_sid")
         )
         .drop("_sid")
-        .join(side(right_col, "_sh_b"), on=F.col(right_col) == F.col("_sid"))
+        .join(side("doc_id_b", "_sh_b"), on=F.col("doc_id_b") == F.col("_sid"))
         .drop("_sid")
     )
 
@@ -900,11 +900,8 @@ def neardup_lsh_verified(
         max_bucket_size=max_bucket_size,
     )
     j = _fetch_candidate_shingles(df, id_col, text_col, shingle_n, cands)
-    inter = F.size(F.array_intersect(F.col("_sh_a"), F.col("_sh_b")))
-    union = F.size(F.array_union(F.col("_sh_a"), F.col("_sh_b")))
-    jac = F.round(inter.cast("double") / union.cast("double"), 4)
     return (
-        j.select("doc_id_a", "doc_id_b", jac.alias("jaccard"))
+        j.select("doc_id_a", "doc_id_b", _jaccard("_sh_a", "_sh_b").alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -1449,10 +1446,7 @@ def _verify_jaccard(
             right_id,
         )
     )
-    inter = F.size(F.array_intersect(F.col("_ta"), F.col("_tb")))
-    union = F.size(F.array_union(F.col("_ta"), F.col("_tb")))
-    jac = F.round(inter.cast("double") / union.cast("double"), 4)
-    return j.select(left_id, right_id, jac.alias("jaccard")).filter(
+    return j.select(left_id, right_id, _jaccard("_ta", "_tb").alias("jaccard")).filter(
         F.col("jaccard") >= F.lit(t_pct / 100.0)
     )
 

@@ -41,23 +41,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from purpleair_data_logger_spark.operators.aggregations import time_bucket
-
-
-def _spread_by_key(df: DataFrame, key_col: str) -> DataFrame:
-    """Hash-repartition by key with an EXPLICIT partition count — the
-    `text._repartition_by_key` / `dedup.parallelize_small_scan`
-    pattern, applied to the mapInPandas stages here (r13): a bare
-    ``repartition(col)`` lets AQE coalesce the exchange to ONE
-    partition at local data sizes (its advisory is BYTE-based, and a
-    few MB of series rows look trivially small), which serialized the
-    whole per-key Python kernel into a single worker — measured
-    `lttb_downsample` 2.4 s with 1 task vs ~0.7 s at 32. The explicit
-    count is never coalesced; max(defaultParallelism, input
-    partitions) stays scan-sized on a cluster, so at scale this is
-    the same one-shuffle shape, never a constriction."""
-    sc = df.sparkSession.sparkContext
-    n = max(sc.defaultParallelism, df.rdd.getNumPartitions())
-    return df.repartition(n, F.col(key_col))
+from purpleair_data_logger_spark.operators.text import _repartition_by_key
 
 
 def _placeable(df: DataFrame, *cols: str) -> DataFrame:
@@ -292,7 +276,7 @@ def lttb_downsample(
         & F.col(value_col).isNotNull()
     ).select(key_col, ts_col, value_col)
     return (
-        _spread_by_key(pre, key_col)
+        _repartition_by_key(pre, key_col)
         .sortWithinPartitions(key_col, ts_col, value_col)
         .mapInPandas(fn, out_schema)
     )
@@ -418,8 +402,8 @@ def asap_smooth(
 
     # NULL key/ts rows are unplaceable and dropped (the `_placeable`
     # family contract, and exactly what `lttb_downsample` does). Found
-    # by the r14 fuzz twin: the r13 `_spread_by_key` change hashes NULL
-    # keys into their own partition, where pandas `groupby` (which
+    # by the r14 fuzz twin: the r13 `_repartition_by_key` spread hashes
+    # NULL keys into their own partition, where pandas `groupby` (which
     # drops NaN keys) left `_smooth` with zero groups and
     # `pd.concat([])` raised — before the spread, NULL-key rows rode a
     # mixed partition and were dropped silently by the same groupby.
@@ -431,7 +415,7 @@ def asap_smooth(
         key_col, ts_col, F.col(value_col).cast("double").alias(value_col)
     )
     return (
-        _spread_by_key(pre, key_col)
+        _repartition_by_key(pre, key_col)
         .sortWithinPartitions(key_col, ts_col, value_col)
         .mapInPandas(fn, out_schema)
     )

@@ -191,6 +191,8 @@ def _repartition_by_key(df: DataFrame, key_col: str) -> DataFrame:
     explicit count is never coalesced; max(defaultParallelism,
     current partitions) keeps the count scan-sized at scale, so the
     one-shuffle partitioning-reuse shape is preserved on a cluster.
+    The per-key mapInPandas stages of `hyperfunctions` spread through
+    it too (r13: `lttb_downsample` 2.4 s in one task, ~0.7 s at 32).
     """
     sc = df.sparkSession.sparkContext
     n = max(sc.defaultParallelism, df.rdd.getNumPartitions())

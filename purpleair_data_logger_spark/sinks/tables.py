@@ -90,7 +90,9 @@ class SensorTableStore:
         action} for the tables that needed repair. The multi-table
         snapshot (`_publish`'s all-or-none publish) heals FIRST, as a
         unit — its members must never be healed per-table, or a
-        staged-but-unpublished member would roll forward alone."""
+        staged-but-unpublished member would roll forward alone. Last,
+        `atomic.gc_orphans` collects the stale temp markers, lease
+        asides and marker-less lease that no heal rolls."""
         actions = {}
         snap = atomic.heal_snapshot(self.base_path)
         if snap:
@@ -100,6 +102,7 @@ class SensorTableStore:
             action = atomic.heal(p)
             if action:
                 actions[t] = action
+        atomic.gc_orphans(self.base_path)
         return actions
 
     def path(self, table: str) -> str:

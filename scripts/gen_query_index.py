@@ -19,8 +19,9 @@ def main() -> None:
         "# QUERIES — catalog index (generated by scripts/gen_query_index.py)",
         "",
         f"{len(qs)} queries. The driver's correctness gate records the "
-        "first 50 (`catalog.all_queries` order; see `_GATE_PRIORITY` / "
-        "`_GATE_DEFER`). `oracle`: full DuckDB SQL replay; `rows-only`: "
+        "first 50 (`catalog.all_queries` order: oldest committed "
+        "`CORRECTNESS_r*.json` round first, then `_GATE_RETIRED`, then "
+        "rows-only). `oracle`: full DuckDB SQL replay; `rows-only`: "
         "non-SQL-expressible (iterative/approximate), pytest-pinned "
         "instead.",
         "",

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 
 import pyarrow.parquet as pq
 import pytest
@@ -16,7 +17,11 @@ from pyspark.sql import functions as F
 from purpleair_data_logger_spark import schema as S
 from purpleair_data_logger_spark.operators import transforms as X
 from purpleair_data_logger_spark.sinks import atomic
-from purpleair_data_logger_spark.sinks.tables import PARTITION_COL, SensorTableStore
+from purpleair_data_logger_spark.sinks.tables import (
+    PARTITION_COL,
+    SensorTableStore,
+    _dated,
+)
 from purpleair_data_logger_spark.sources.spark_datasource import payload_frame
 
 BASE_TS = 1659710232  # 2022-08-05 … UTC
@@ -44,23 +49,33 @@ def _seeded_store(spark, tmp_path):
     return store
 
 
+def _upsert_batch(spark):
+    """The one-reading upsert batch the crash helpers stage, dated and
+    deduplicated the way `upsert_wide` does."""
+    wide = _wide(spark, BASE_TS, [[1, "s1", 99, 9.9, 0]])
+    return _dated(wide.dropDuplicates(S.KEY_COLUMNS))
+
+
+def _staged_upsert(store, batch, table):
+    """``table``'s upsert rewrite, built as `upsert_wide` builds it:
+    the batch's projection plus the stored survivors of the batch's
+    dates (with their stored ``reading_date``), in the store's layout."""
+    survivors = (
+        store._scan(table)
+        .filter(F.col(PARTITION_COL).isin(store._batch_dates(batch)))
+        .join(batch.select(*S.KEY_COLUMNS), on=S.KEY_COLUMNS, how="left_anti")
+    )
+    return store._prepare(store._project(batch, table).unionByName(survivors))
+
+
 def _stage_upsert_then_crash(spark, store):
     """Replay upsert_wide's staging write for one table, then 'crash'
     before atomic.commit — the staging dir is complete (_SUCCESS) but
     nothing was swapped."""
     live = store.path(S.ENVIRONMENTAL)
-    batch = _wide(spark, BASE_TS, [[1, "s1", 99, 9.9, 0]])
-    part = X.vertical_split(batch.dropDuplicates(S.KEY_COLUMNS))[S.ENVIRONMENTAL]
-    survivors = (
-        spark.read.parquet(live)
-        .filter(F.col(PARTITION_COL).isin([r[0] for r in batch.select(
-            F.to_date(F.col("data_time_stamp")).alias("d")).distinct().collect()]))
-        .drop(PARTITION_COL)
-        .join(part.select(*S.KEY_COLUMNS), on=S.KEY_COLUMNS, how="left_anti")
-    )
-    store._prepare(part.unionByName(survivors)).write.mode("overwrite").partitionBy(
-        PARTITION_COL
-    ).parquet(atomic.staging_path(live))
+    _staged_upsert(store, _upsert_batch(spark), S.ENVIRONMENTAL).write.mode(
+        "overwrite"
+    ).partitionBy(PARTITION_COL).parquet(atomic.staging_path(live))
 
 
 def test_crash_before_commit_rolls_forward(spark, tmp_path):
@@ -142,34 +157,19 @@ def _stage_snapshot_then_crash(spark, store, *, tables_to_stage=None):
     rewrite per table), then 'crash' before the marker flip. With
     ``tables_to_stage`` given, only those members finish staging —
     simulating a crash mid-staging."""
-    batch = _wide(spark, BASE_TS, [[1, "s1", 99, 9.9, 0]])
-    parts = X.vertical_split(batch.dropDuplicates(S.KEY_COLUMNS))
-    atomic.snapshot_begin(store.base_path, [store.path(t) for t in parts])
-    batch_dates = [
-        r[0]
-        for r in batch.select(
-            F.to_date(F.col("data_time_stamp")).alias("d")
-        ).distinct().collect()
-    ]
-    for table, part in parts.items():
+    batch = _upsert_batch(spark)
+    atomic.snapshot_begin(store.base_path, [store.path(t) for t in S.TABLE_NAMES])
+    for table in S.TABLE_NAMES:
         if tables_to_stage is not None and table not in tables_to_stage:
             continue
-        survivors = (
-            spark.read.parquet(store.path(table))
-            .filter(F.col(PARTITION_COL).isin(batch_dates))
-            .drop(PARTITION_COL)
-            .join(part.select(*S.KEY_COLUMNS), on=S.KEY_COLUMNS, how="left_anti")
-        )
-        store._prepare(part.unionByName(survivors)).write.mode(
-            "overwrite"
-        ).partitionBy(PARTITION_COL).parquet(
-            atomic.staging_path(store.path(table))
-        )
+        _staged_upsert(store, batch, table).write.mode("overwrite").partitionBy(
+            PARTITION_COL
+        ).parquet(atomic.staging_path(store.path(table)))
     # The 'crashed' writer stops heartbeating: age its lease past the
     # TTL so a healing reader treats it as dead (within the TTL a
     # reader correctly REFUSES to heal — see test_snapshot_lease.py).
     _age_lease(store.base_path)
-    return parts
+    return S.TABLE_NAMES
 
 
 def _age_lease(base):
@@ -409,3 +409,24 @@ def test_append_refused_while_another_writer_holds_the_lease(spark, tmp_path):
     with pytest.raises(atomic.SnapshotLeaseHeld):
         store.append_wide(_wide(spark, BASE_TS + 120, [[1, "s1", 42, 1.7, 0]]))
     assert _store_files(store.base_path) == files
+
+
+def test_reopen_collects_stale_crash_orphans(spark, tmp_path):
+    """Reopening runs the whole recovery cycle, `atomic.gc_orphans`
+    included: a crashed writer's stale temp intent marker, lease aside
+    and marker-less lease are gone afterwards, and no Spark job ran."""
+    base = tmp_path / "tables"
+    base.mkdir()
+    orphans = [
+        base / (atomic.SNAPSHOT_PENDING + ".tmp.abc"),
+        base / (atomic.SNAPSHOT_LEASE + ".reclaimed.abc"),
+        base / atomic.SNAPSHOT_LEASE,
+    ]
+    stale = time.time() - atomic.DEFAULT_LEASE_TTL - 60
+    for p in orphans:
+        p.write_text("w1\n")
+        os.utime(p, (stale, stale))
+    jobs = set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+    SensorTableStore(spark, str(base))
+    assert sorted(os.listdir(base)) == []
+    assert set(spark.sparkContext.statusTracker().getJobIdsForGroup(None)) == jobs

@@ -115,32 +115,46 @@ def test_gate_window_rotates_oldest_artifact_first():
     assert buckets == sorted(buckets)
     first_retired = buckets.index(1) if 1 in buckets else len(names)
 
-    # effective age mirrors catalog._age: the r14 touched-code boost
-    # fronts re-shaped queries until an artifact from round >=
-    # _GATE_BOOST_ROUND records them, then expires
+    # a query's age is its newest artifact round (0 if never gated)
     def age(n):
-        if n in catalog._GATE_BOOST and newest.get(n, 0) < catalog._GATE_BOOST_ROUND:
-            return -1
         return newest.get(n, 0)
 
-    # active oracled section is sorted by effective age ascending
+    # active oracled section is sorted by age ascending
     rounds = [age(n) for n in names[:first_retired]]
     assert rounds == sorted(rounds)
-    # a query never seen in any artifact (round 0) gates ahead of
-    # everything except the explicit boost tier
+    # a query never seen in any artifact (round 0) gates first
     assert min(rounds) == rounds[0]
-    # freshness: no rotating query OUTSIDE the window is (effectively)
-    # staler than anything inside it
+    # freshness: no rotating query OUTSIDE the window is staler than
+    # anything inside it
     if first_retired > 50:
         assert max(age(n) for n in window) <= min(
             age(n) for n in names[50:first_retired]
         )
-    # the boost can never smuggle a rows-only or retired query into
-    # the window, and it must self-expire (every boosted name either
-    # has no round->=14 artifact yet, or sorts by its real age)
-    for n in catalog._GATE_BOOST:
-        assert catalog._REGISTRY[n].oracle is not None
-        assert n not in catalog._GATE_RETIRED
+
+
+def test_gate_order_without_artifacts(monkeypatch):
+    """A checkout without CORRECTNESS_r*.json artifacts gets the same
+    sort with every query at round 0: an all-oracled, retirement-free
+    window, the buckets in order, and registry order inside each."""
+    monkeypatch.setattr(catalog, "_artifact_rounds", lambda: {})
+    reg = catalog._REGISTRY
+    names = list(catalog.all_queries())
+    assert sorted(names) == sorted(reg)
+    for n in names[: catalog.GATE_WINDOW]:
+        assert reg[n].oracle is not None and n not in catalog._GATE_RETIRED
+
+    def bucket(n):
+        if reg[n].oracle is None:
+            return 2
+        return 1 if n in catalog._GATE_RETIRED else 0
+
+    buckets = [bucket(n) for n in names]
+    assert buckets == sorted(buckets)
+    idx = {n: i for i, n in enumerate(reg)}
+    for b in set(buckets):
+        members = [idx[n] for n in names if bucket(n) == b]
+        assert members == sorted(members)
+    catalog._validate_gate_lists()
 
 
 def test_gate_retirement_contract():
@@ -157,7 +171,7 @@ def test_gate_retirement_contract():
         assert reg[n].oracle is not None, f"{n}: rows-only cannot retire"
         assert why.strip(), f"{n}: rationale required"
     newest = catalog._artifact_rounds()
-    assert newest is not None
+    assert newest, "driver artifacts expected in the repo checkout"
     never_gated = [n for n in retired if not newest.get(n)]
     assert not never_gated, f"retired without a recorded gate round: {never_gated}"
     n_active = sum(
